@@ -1,4 +1,4 @@
-"""Indicator fold expressions — the reference's one aggregate, generalized.
+"""Indicator expressions — the reference's one aggregate, generalized.
 
 Reference parity (SURVEY.md S1-S5):
   * alpha = 2 / (period_minutes*60 + 1)    (indicators.rs:17, main.rs:111)
@@ -9,10 +9,18 @@ Reference parity (SURVEY.md S1-S5):
   * fold order: reference uses Kafka arrival order (nondeterministic);
     we define it over ascending (order_cols) — documented divergence S5.
 
-Everything here is a pure Catalyst expression (higher-order functions) —
-no UDFs, so the fold stays inside whole-stage codegen and the groupBy is
-a normal partial+final shuffle aggregate that scales to 100 TB: state per
-group is one array of projected values, built map-side via collect_list.
+`windowed_ewma` is the one definition of "tumbling-window EWMA, filtered
+to > 0" — the flagship batch query, the streaming pipeline and the trade
+pipeline all build on it. On a stream it runs the fold
+(`ewma_fold(ordered_values(...))`); on a batch DataFrame it runs the
+fold's reverse-rank closed form. `windowed_ewma_two_level` splits very
+large windows into segments and recombines them with
+`combine_segments`; `cumulative_ewma_col` is the cross-window variant.
+
+Everything here except `holt_smoothing` is a pure Catalyst expression
+(higher-order functions, window functions) — no UDFs, so the work stays
+inside whole-stage codegen and each groupBy is a normal partial+final
+shuffle aggregate.
 """
 
 from __future__ import annotations
@@ -71,106 +79,94 @@ def windowed_ewma(
     period_minutes: int = 5,
     emit_positive_only: bool = True,
 ) -> DataFrame:
-    """The reference pipeline's aggregation, batch/event-time form (R7+R8+R9).
+    """The reference pipeline's aggregation (R7+R8+R9), batch or streaming.
 
-    Tumbling `period_minutes` windows on event time; per window (and
-    optional extra group columns) the zero-seeded EWMA fold in
-    (order_cols) order; windows with ewma<=0 suppressed (S4).
+    Tumbling `period_minutes` windows keyed by ``F.window(ts_col)`` —
+    epoch-aligned, time-zone independent, valid under a watermark; per
+    window (and optional extra group columns) the zero-seeded EWMA in
+    (order_cols) order; windows with ewma<=0 suppressed (S4). Rows
+    with a null ts_col fall in no window.
 
-    Output: group_cols..., window_start/window_end (epoch seconds, BIGINT —
-    cross-engine-stable), n_rows, ewma.
+    Output: group_cols..., window_start, window_end (epoch seconds,
+    BIGINT — cross-engine-stable), n_rows, ewma.
+
+    The aggregate follows ``df.isStreaming``:
+
+    * streaming — the ``ewma_fold(ordered_values(...))`` fold: the state
+      store keeps one partial collect_list per open window, and the
+      caller's watermark bounds the open windows. ``row_number`` cannot
+      run inside a streaming aggregation.
+    * batch — the fold's closed form
+          ewma = sum_i alpha * (1-alpha)^(n-i) * x_i     (i = 1..n in order)
+      as window-rank + one codegen'd sum: no per-window arrays, one
+      Exchange shared by the rank window and the groupBy. The exponent
+      n - i is the row's rank in the REVERSED order minus one, so one
+      descending row_number gives it, and (1-alpha)^(n-i) stays in
+      [0, 1] at any n. The rank is by (order_cols..., value) DESC, the
+      exact mirror of the fold's array_sort key, so rows tied on
+      order_cols take the positions the fold gives them and the result
+      is deterministic. It equals the fold up to floating-point
+      rounding (the terms associate differently), not bit for bit. A
+      null value is skipped by the sum, where it nulls the fold.
     """
-    alpha = ewma_alpha(period_minutes)
-    secs = period_minutes * 60
-    wstart = (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
-    out = (
-        df.withColumn("window_start", wstart)
-        .groupBy(*group_cols, "window_start")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            ewma_fold(ordered_values(value_col, list(order_cols)), alpha).alias(
-                "ewma"
-            ),
-        )
-        .withColumn("window_end", (F.col("window_start") + secs).cast("long"))
-    )
-    if emit_positive_only:
-        out = out.filter(F.col("ewma") > 0.0)
-    return out
-
-
-def windowed_ewma_closed_form(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    group_cols: Sequence[str] = (),
-    period_minutes: int = 5,
-    emit_positive_only: bool = True,
-) -> DataFrame:
-    """windowed_ewma as a rank-indexed SUM instead of an array fold.
-
-    The zero-seeded fold expands to
-        ewma = sum_i alpha * (1-alpha)^(n-i) * x_i      (i = 1..n in order)
-    so ranking each row inside its (group, window) partition turns the
-    whole aggregate into window-rank + one codegen'd sum — no
-    collect_list arrays, no interpreted higher-order fold. Same single
-    shuffle (the rank window and the groupBy share the partitioning, so
-    Catalyst plans ONE Exchange). (1-alpha)^(n-i) stays in [0,1] — no
-    overflow at any n, unlike the cumulative closed form's lam^-i.
-
-    Numerically this matches the fold to well past 6 decimals (the
-    DuckDB oracle for ewma_5min IS this closed form and hash-matches the
-    fold), but it is not bit-identical; windowed_ewma remains the
-    reference-semantics canonical. Use this variant for batch throughput
-    on wide windows.
-
-    Round-12 optimization (guide §2.4 — remove passes sharing one
-    exchange): the exponent n - rn (rows AFTER this one in window
-    order) is exactly rev_rn - 1 where rev_rn ranks the REVERSED total
-    order, so one row_number over the descending order replaces the
-    count(*) window + ascending row_number pair — one Sort + one
-    Window node instead of two of each, same single Exchange.
-
-    REQUIREMENT (ADVICE r12): ``order_cols`` MUST form a unique total
-    order within each (group, window) partition — the reverse-rank
-    identity n - rn = rev_rn - 1 is the ONLY implementation now, and it
-    is well-defined only when the descending rank is the exact mirror
-    of the ascending one. With ties, row_number breaks them
-    nondeterministically in BOTH directions and the exponent assignment
-    (hence the float sum) becomes run-dependent — same nondeterminism
-    the old two-window form had, but callers should not rely on it.
-    The default (ts, event_id) tiebreak is unique; the per-row term is
-    then bit-identical to the old form. Plan diff pinned in
-    plans/r12/ewma_5min_{before,after}.txt; parity re-verified at
-    sf0.001/sf0.01/sf1.
-    """
-    alpha = ewma_alpha(period_minutes)
-    lam = 1.0 - alpha
-    secs = period_minutes * 60
     from pyspark.sql import Window as W
 
-    wstart = (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
-    base = df.withColumn("window_start", wstart)
-    part = W.partitionBy(*group_cols, "window_start")
-    rev_rn = F.row_number().over(
-        part.orderBy(*[F.col(c).desc() for c in order_cols])
-    )
-    term = (
-        F.lit(alpha)
-        * F.pow(F.lit(lam), (rev_rn - 1).cast("double"))
-        * F.col(value_col)
-    )
-    out = (
-        base.withColumn("__term", term)
-        .groupBy(*group_cols, "window_start")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("__term").alias("ewma"))
-        .withColumn("window_end", (F.col("window_start") + secs).cast("long"))
-        .select(*group_cols, "window_start", "n_rows", "ewma", "window_end")
+    alpha = ewma_alpha(period_minutes)
+    win = F.window(F.col(ts_col), f"{period_minutes} minutes").alias("win")
+    if df.isStreaming:
+        grouped = df.groupBy(win, *group_cols)
+        ewma = ewma_fold(ordered_values(value_col, list(order_cols)), alpha)
+    else:
+        rank_desc = [F.desc(c) for c in (*order_cols, value_col)]
+        rev_rn = F.row_number().over(
+            W.partitionBy(*group_cols, "win").orderBy(*rank_desc)
+        )
+        term = (
+            F.lit(alpha)
+            * F.pow(F.lit(1.0 - alpha), (rev_rn - 1).cast("double"))
+            * F.col(value_col)
+        )
+        grouped = (
+            df.withColumn("win", win)
+            .withColumn("__term", term)
+            .groupBy("win", *group_cols)
+        )
+        ewma = F.sum("__term")
+    out = grouped.agg(F.count(F.lit(1)).alias("n_rows"), ewma.alias("ewma")).select(
+        *group_cols,
+        F.unix_timestamp("win.start").alias("window_start"),
+        F.unix_timestamp("win.end").alias("window_end"),
+        "n_rows",
+        "ewma",
     )
     if emit_positive_only:
-        out = out.filter(F.col("ewma") > 0.0)
+        out = out.filter(F.col("ewma") > 0.0)  # R9, main.rs:118
     return out
+
+
+def combine_segments(seg_key: Column, alpha: float) -> Column:
+    """Aggregate expression: one window's EWMA from its segments' partials.
+
+    Each input row is one ordered segment of the window: ``__n`` rows
+    whose zero-seeded fold is ``__s``. The fold composes over segments,
+        S(c1 ++ c2) = S(c2) + lam^n2 * S(c1),     lam = 1 - alpha,
+    so folding the partials in ``seg_key`` order gives struct(s, n): the
+    window's EWMA and row count.
+    """
+    lam = 1.0 - alpha
+    segs = F.array_sort(
+        F.collect_list(F.struct(seg_key, F.col("__n"), F.col("__s")))
+    )
+    return F.aggregate(
+        segs,
+        F.named_struct(F.lit("s"), F.lit(0.0), F.lit("n"), F.lit(0).cast("long")),
+        lambda acc, x: F.named_struct(
+            F.lit("s"),
+            x["__s"] + F.pow(F.lit(lam), x["__n"]) * acc["s"],
+            F.lit("n"),
+            acc["n"] + x["__n"],
+        ),
+    )
 
 
 def cumulative_ewma_col(
@@ -211,18 +207,15 @@ def windowed_ewma_two_level(
 ) -> DataFrame:
     """windowed_ewma for windows too large to collect on one reducer.
 
-    The zero-seeded EWMA fold composes over ordered segments:
-        S(c1 ++ c2) = S(c2) + lam^n2 * S(c1)
-    so we fold per (group, window, sub-second-bucket) first — bounded
-    arrays, map-side partials — then combine the per-bucket partials
-    (n, S) in bucket order with the composition rule. Two shuffles,
+    Folds per (group, window, sub-second-bucket) first — bounded
+    arrays, map-side partials — then combines the per-bucket partials
+    (n, S) in bucket order with ``combine_segments``. Two shuffles,
     O(rows-per-sub-bucket) peak memory instead of O(rows-per-window):
     the shape that survives a window holding billions of rows at 100 TB.
-    Bit-identical to windowed_ewma when each sub-bucket preserves the
-    (ts, tiebreak) order (same fold, same order, same arithmetic).
+    Same values as windowed_ewma up to rounding: the composition
+    regroups the fold's arithmetic.
     """
     alpha = ewma_alpha(period_minutes)
-    lam = 1.0 - alpha
     secs = period_minutes * 60
     wstart = (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
     sub = (
@@ -241,22 +234,9 @@ def windowed_ewma_two_level(
             ).alias("__s"),
         )
     )
-    segs = F.array_sort(
-        F.collect_list(F.struct(F.col("__sub"), F.col("__n"), F.col("__s")))
-    )
-    combined = F.aggregate(
-        segs,
-        F.named_struct(F.lit("s"), F.lit(0.0), F.lit("n"), F.lit(0).cast("long")),
-        lambda acc, x: F.named_struct(
-            F.lit("s"),
-            x["__s"] + F.pow(F.lit(lam), x["__n"]) * acc["s"],
-            F.lit("n"),
-            acc["n"] + x["__n"],
-        ),
-    )
     out = (
         partials.groupBy(*group_cols, "window_start")
-        .agg(combined.alias("__c"))
+        .agg(combine_segments(F.col("__sub"), alpha).alias("__c"))
         .select(
             *group_cols,
             "window_start",
@@ -285,7 +265,7 @@ def holt_smoothing(
         b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
 
     seeded l_1 = x_1, b_1 = 0. The coupled recurrence has no
-    rank-indexed closed form (unlike plain EWMA, indicators.py:102),
+    rank-indexed closed form (unlike plain EWMA, see windowed_ewma),
     so each key's series folds sequentially in an Arrow-batched
     ``applyInPandas`` — the standard per-entity time-series shape: one
     shuffle on the key, each task owns whole series. Emits the final

@@ -47,46 +47,18 @@ _A5 = ewma_alpha(5)  # 2/301 — indicators.rs:17 with period=5 (main.rs:111)
     """,
 )
 def ewma_5min(spark, sf_dir):
-    # closed-form (rank-indexed sum) variant: same alpha/seed/order
-    # semantics as the canonical fold (windowed_ewma — used by the trade
-    # pipeline and streaming paths), verified equal to the fold at 6dp
-    # in tests; ~25% faster at sf0.1 because the whole aggregate is
-    # codegen'd with no per-window arrays.
-    # Round-13 (guide §1): SQL-string twin of
-    # indicators.windowed_ewma_closed_form for this fixed shape (the
-    # helper stays the generic surface) — one JVM parse instead of the
-    # py4j Column building; plan identical modulo expression IDs
-    # (plans/r13/ewma_5min_norm_{before,after}.txt). The reverse-rank
-    # exponent identity and its unique-total-order requirement are
-    # documented on the helper.
-    a = _A5
-    lam = 1.0 - a
+    """The flagship: `windowed_ewma` per event type, in batch (closed
+    form) — the same function the stream and trade pipeline run."""
     e = t(spark, sf_dir, "events")
-    return spark.sql(
-        f"""
-        WITH b AS (
-          SELECT event_type, value, ts, event_id,
-                 floor(unix_timestamp(ts) / 300) * 300 AS window_start
-          FROM {{e}}
-        ), r AS (
-          SELECT event_type, window_start, value,
-                 row_number() OVER (PARTITION BY event_type, window_start
-                                    ORDER BY ts DESC, event_id DESC)
-                   AS rev_rn
-          FROM b
-        ), g AS (
-          SELECT event_type, window_start, count(1) AS n_rows,
-                 sum(({a!r} * pow({lam!r}, CAST(rev_rn - 1 AS DOUBLE)))
-                     * value) AS ewma
-          FROM r GROUP BY event_type, window_start
-        )
-        SELECT event_type, window_start,
-               window_start + 300 AS window_end,
-               n_rows, round(ewma, 6) AS ewma
-        FROM g WHERE ewma > 0
-        """,
-        e=e,
+    out = windowed_ewma(
+        e,
+        ts_col="ts",
+        value_col="value",
+        order_cols=("ts", "event_id"),
+        group_cols=("event_type",),
+        period_minutes=5,
     )
+    return out.withColumn("ewma", F.round("ewma", 6))
 
 
 @query(
@@ -415,19 +387,26 @@ def trade_pipeline_ewma(spark, sf_dir):
 def trade_pipeline_ewma_avro(spark, sf_dir):
     """The reference chain over the REAL Avro wire format: pure-python
     spec-conformant binary codec (cross-checked against the Java Avro
-    library in tests) behind Confluent 5-byte frames. Output equals the
-    JSON-framed chain (asserted in tests/test_trade_pipeline.py)."""
+    library in tests) behind Confluent 5-byte frames, decoded by each
+    frame's schema id against a one-entry registry snapshot. Output
+    equals the JSON-framed chain (asserted in tests/test_trade_pipeline.py)."""
+    from ..schemas import TRADE_SCHEMA
+    from ..streaming.avro_codec import TRADES_AVRO_SCHEMA
     from ..streaming.trade_pipeline import (
         aggregate_trades,
-        decode_trades_avro,
+        decode_trades_avro_dispatch,
         frame_trades_avro,
         synthetic_trades,
     )
 
     trades = synthetic_trades(spark, n=20_000)
-    return aggregate_trades(
-        decode_trades_avro(frame_trades_avro(trades)), per_instrument=True
+    decoded = decode_trades_avro_dispatch(
+        frame_trades_avro(trades, schema_id=7),
+        {7: TRADES_AVRO_SCHEMA},
+        TRADES_AVRO_SCHEMA,
+        TRADE_SCHEMA,
     )
+    return aggregate_trades(decoded, per_instrument=True)
 
 
 @query("trade_pipeline_schema_evolution", oracle=None)

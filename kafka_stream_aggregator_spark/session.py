@@ -18,6 +18,13 @@ from pyspark.sql import SparkSession
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
+def env_flag(name: str) -> bool:
+    """Parse an on/off environment variable by value: "1", "true",
+    "yes" and "on" (any case) are on; "0", "false", empty and unset are
+    off."""
+    return os.environ.get(name, "").strip().lower() in ("1", "true", "yes", "on")
+
+
 def get_spark(
     app_name: str = "kafka_stream_aggregator_spark",
     cpus: int | None = None,
@@ -54,7 +61,7 @@ def get_spark(
         # plan evidence lives in plans/r13/shj_* + tests/test_plans.py.
         .config(
             "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") else "false",
+            "true" if env_flag("SPARK_GRAFT_PREFER_SMJ") else "false",
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,8 +1,8 @@
 """Structured Streaming layer — the reference's three services, Spark-first.
 
 sources.py   Kafka/file/rate stream sources + Confluent Avro framing helper
-pipeline.py  the R7/R8/R9 aggregation pipeline (event-time canonical,
-             processing-time compat mode) and the R1-R4 ingest passthrough
+pipeline.py  the R7/R8/R9 aggregation pipeline (event-time windows under a
+             watermark, built on indicators.windowed_ewma), dedup, joins
 stateful.py  continuous cross-window EWMA (applyInPandasWithState)
 sinks.py     foreachBatch JDBC/parquet/kafka sinks (R11 parity)
 """

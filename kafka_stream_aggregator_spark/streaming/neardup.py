@@ -339,8 +339,7 @@ def streaming_near_dup_tws(
     old members still expire individually while the bucket stays live.
 
     Same pair semantics as the v1 operator (same signatures, banding,
-    in-batch comparison, size cap); like continuous_ewma_tws it
-    REQUIRES the RocksDB state store provider and google.protobuf in
+    in-batch comparison, size cap). It REQUIRES the RocksDB state store provider and google.protobuf in
     the Python worker (plan construction works without; execution is
     integration-gated in tests)."""
     from pyspark.sql.streaming.stateful_processor import (

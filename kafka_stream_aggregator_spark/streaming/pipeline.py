@@ -3,11 +3,13 @@
 Reference behavior (bin/agg-producer/main.rs:100-131): a wall-clock
 timer fires every `period` minutes; the buffered prices are folded
 through the zero-seeded EWMA; results with ewma<=0 are suppressed;
-output keyed by emit time. Canonical mode here upgrades to event-time
-tumbling windows + watermark (late data handled, deterministic fold
-order via (ts, tiebreak) sort — SURVEY S3/S5/S7); compat mode
-reproduces the literal processing-time behavior with a
-Trigger(processingTime=...) + foreachBatch fold.
+output keyed by emit time. Here that becomes event-time tumbling
+windows + watermark (late data handled, deterministic fold order via
+(ts, tiebreak) sort — SURVEY S3/S5/S7): `streaming_windowed_ewma` is
+`indicators.windowed_ewma` under a watermark, the same function the
+batch queries use; on a stream it runs the EWMA as an array fold inside
+the stateful aggregation. Also here: the two-level (chained stateful)
+EWMA, watermarked dedup, sliding/session windows and stream joins.
 """
 
 from __future__ import annotations
@@ -17,7 +19,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..indicators import ewma_alpha, ewma_fold, ordered_values
+from ..indicators import (
+    combine_segments,
+    ewma_alpha,
+    ewma_fold,
+    ordered_values,
+    windowed_ewma,
+)
 
 
 def streaming_windowed_ewma(
@@ -30,38 +38,23 @@ def streaming_windowed_ewma(
     watermark: str = "10 minutes",
     emit_positive_only: bool = True,
 ) -> DataFrame:
-    """Event-time tumbling EWMA on a streaming DataFrame.
+    """Event-time tumbling EWMA on a streaming DataFrame:
+    ``windowed_ewma`` under a ``watermark`` on ``ts_col``.
 
-    groupBy(window(...)) + the same pure-Catalyst fold as batch — state
-    store keeps one partial collect_list per open window; the watermark
-    bounds state (windows older than it are finalized and evicted), so
-    state size is O(open windows x rows-in-window), not O(stream).
-    Append output mode -> each window emits exactly once, on close.
+    The state store keeps one partial collect_list per open window; the
+    watermark finalizes and evicts windows older than it, so state size
+    is O(open windows x rows-in-window), not O(stream). Append output
+    mode -> each window emits exactly once, on close.
     """
-    alpha = ewma_alpha(period_minutes)
-    out = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), f"{period_minutes} minutes").alias("win"),
-            *group_cols,
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            ewma_fold(ordered_values(value_col, list(order_cols)), alpha).alias(
-                "ewma"
-            ),
-        )
-        .select(
-            *group_cols,
-            F.unix_timestamp("win.start").alias("window_start"),
-            F.unix_timestamp("win.end").alias("window_end"),
-            "n_rows",
-            "ewma",
-        )
+    return windowed_ewma(
+        stream.withWatermark(ts_col, watermark),
+        ts_col=ts_col,
+        value_col=value_col,
+        order_cols=order_cols,
+        group_cols=group_cols,
+        period_minutes=period_minutes,
+        emit_positive_only=emit_positive_only,
     )
-    if emit_positive_only:
-        out = out.filter(F.col("ewma") > 0.0)  # R9, main.rs:118
-    return out
 
 
 def streaming_dedup(
@@ -145,44 +138,6 @@ def session_window_stats(
     )
 
 
-def processing_time_ewma_query(
-    stream: DataFrame,
-    sink_fn,
-    value_col: str = "value",
-    period_minutes: int = 5,
-    checkpoint: str | None = None,
-):
-    """S3 compat mode: literal reference semantics — a processing-time
-    trigger fires every period; each micro-batch's buffered rows are
-    folded in arrival order and the result (if > 0) handed to sink_fn
-    as (ewma_row_df, batch_id). This is Trigger(processingTime) +
-    foreachBatch, the direct analogue of the tokio interval + mutex
-    buffer (main.rs:83-131)."""
-    alpha = ewma_alpha(period_minutes)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        agg = batch_df.agg(
-            ewma_fold(
-                F.collect_list(F.col(value_col)), alpha
-            ).alias("current"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ).select(
-            F.lit(period_minutes).alias("period"),
-            F.lit(alpha).alias("alpha"),
-            "current",
-            "n_rows",
-        )
-        out = agg.filter(F.col("current") > 0.0)
-        sink_fn(out, batch_id)
-
-    w = stream.writeStream.foreachBatch(fold_batch).trigger(
-        processingTime=f"{period_minutes * 60} seconds"
-    )
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w
-
-
 def stream_static_join(
     stream: DataFrame, dim: DataFrame, on, how: str = "inner"
 ) -> DataFrame:
@@ -259,12 +214,10 @@ def streaming_windowed_ewma_two_level(
     """Streaming EWMA via chained stateful aggregations (Spark >=3.5
     multiple-stateful-operator support): fold per sub-window first
     (bounded state per key), then re-window with window_time() and
-    combine partials with the segment-composition rule
-    S(c1++c2) = S(c2) + lam^n2 * S(c1). The streaming twin of
+    combine the partials with ``combine_segments``. The streaming twin of
     indicators.windowed_ewma_two_level — per-reducer state never holds a
     whole 5-minute window's rows, only its sub-window partials."""
     alpha = ewma_alpha(period_minutes)
-    lam = 1.0 - alpha
     partials = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), sub_window).alias("subwin"), *group_cols)
@@ -275,21 +228,6 @@ def streaming_windowed_ewma_two_level(
             ),
         )
     )
-    segs = F.array_sort(
-        F.collect_list(
-            F.struct(F.col("substart"), F.col("__n"), F.col("__s"))
-        )
-    )
-    combined = F.aggregate(
-        segs,
-        F.named_struct(F.lit("s"), F.lit(0.0), F.lit("n"), F.lit(0).cast("long")),
-        lambda acc, x: F.named_struct(
-            F.lit("s"),
-            x["__s"] + F.pow(F.lit(lam), x["__n"]) * acc["s"],
-            F.lit("n"),
-            acc["n"] + x["__n"],
-        ),
-    )
     out = (
         partials.withColumn("substart", F.col("subwin.start"))
         .groupBy(
@@ -298,7 +236,7 @@ def streaming_windowed_ewma_two_level(
             ),
             *group_cols,
         )
-        .agg(combined.alias("__c"))
+        .agg(combine_segments(F.col("substart"), alpha).alias("__c"))
         .select(
             *group_cols,
             F.unix_timestamp("win.start").alias("window_start"),

@@ -89,78 +89,3 @@ def continuous_ewma(
         outputMode="update",
         timeoutConf=timeout,
     )
-
-
-def continuous_ewma_tws(
-    stream: DataFrame,
-    alpha: float,
-    key_cols: Sequence[str] = ("user_id",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """`continuous_ewma` on the Spark 4.x state-v2 API
-    (transformWithStateInPandas / StatefulProcessor).
-
-    Same semantics and output shape as the applyInPandasWithState
-    version (minus the timeout path — state-v2 expresses that with
-    registered timers instead of a timeout conf); kept as a parallel
-    implementation because state-v2 is where streaming state is headed:
-    typed ValueState/ListState/MapState handles, per-key timers, state
-    TTL, and queryable state — and it REQUIRES the RocksDB state store
-    provider (`spark.sql.streaming.stateStore.providerClass` =
-    ...state.RocksDBStateStoreProvider), which is also the provider
-    you'd run at 100 TB (HDFS-backed in-memory maps do not survive
-    multi-GB per-executor state; RocksDB spills to local disk with
-    changelog checkpointing).
-
-    Equivalence with the v1 implementation and the NumPy fold is pinned
-    in tests/test_streaming.py.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    in_types = {f.name: f.dataType for f in stream.schema.fields}
-    out_schema = T.StructType(
-        [
-            *[T.StructField(k, in_types[k]) for k in key_cols],
-            T.StructField("ewma", T.DoubleType()),
-            T.StructField("n_seen", T.LongType()),
-            T.StructField("finalized", T.BooleanType()),
-        ]
-    )
-    cols = [*key_cols, "ewma", "n_seen", "finalized"]
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ewma", T.StructType(
-                    [
-                        T.StructField("ewma", T.DoubleType()),
-                        T.StructField("n", T.LongType()),
-                    ]
-                )
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prior = self._state.get()
-            ewma, n = prior if prior is not None else (0.0, 0)
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values([ts_col, tiebreak_col])
-            for x in batch[value_col].to_numpy():
-                ewma = alpha * float(x) + (1.0 - alpha) * ewma
-            n += len(batch)
-            self._state.update((float(ewma), int(n)))
-            yield pd.DataFrame([[*key, ewma, n, False]], columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_EwmaProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -9,10 +9,12 @@ The reference's full dataflow (SURVEY.md §3):
 
 This module reproduces that chain on Spark against any source that
 yields framed binary messages (Kafka's value column, or the synthetic
-generator below for tests — no broker/registry in this container, so
-payloads are JSON bodies behind the Confluent-style 5-byte frame;
-swap decode_trades' from_json for from_avro when the spark-avro module
-is on the classpath and the registry supplies writer schemas).
+generator below for tests). Payloads sit behind the Confluent-style
+5-byte frame, as JSON bodies (`frame_trades` / `decode_trades`, decoded
+in the JVM) or Avro bodies (`frame_trades_avro` /
+`decode_trades_avro_dispatch`, the pure-python codec, each record
+decoded by its frame's schema id). The EWMA is `aggregate_trades`, a
+projection of `indicators.windowed_ewma`.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..indicators import ewma_alpha, ewma_fold, ordered_values
+from ..indicators import ewma_alpha, windowed_ewma
 from ..schemas import TRADE_SCHEMA
 from .sources import confluent_avro_payload
 
@@ -105,51 +107,54 @@ def decode_trades(framed: DataFrame) -> DataFrame:
 def aggregate_trades(
     trades: DataFrame, period_minutes: int = 5, per_instrument: bool = False
 ) -> DataFrame:
-    """The agg-producer fold (main.rs:100-131): project price, 5-min
-    window, zero-seeded EWMA in (timestamp, trade_seq) order (SURVEY S5
-    determinism choice), suppress <=0 (S4), emit the reference's record
-    shape EWMA{period, alpha, current} (indicators.rs:6-11) keyed by
-    window_end (S7 deterministic-key choice)."""
-    alpha = ewma_alpha(period_minutes)
-    secs = period_minutes * 60
+    """The agg-producer fold (main.rs:100-131): `windowed_ewma` of price
+    over event time `timestamp_millis(timestamp)`, in (timestamp,
+    trade_seq) order (SURVEY S5 determinism choice), <=0 suppressed
+    (S4), projected onto the reference's record shape EWMA{period,
+    alpha, current} (indicators.rs:6-11) keyed by window_end (S7
+    deterministic-key choice), plus n_trades."""
     group = ["instrument_name"] if per_instrument else []
-    wstart = (F.floor(F.col("timestamp") / (secs * 1000)) * secs).cast("long")
-    return (
-        trades.select(*group, "timestamp", "trade_seq", "price")
-        .withColumn("window_start", wstart)
-        .groupBy(*group, "window_start")
-        .agg(
-            ewma_fold(
-                ordered_values("price", ["timestamp", "trade_seq"]), alpha
-            ).alias("current"),
-            F.count(F.lit(1)).alias("n_trades"),
-        )
-        .filter(F.col("current") > 0.0)
-        .select(
-            *group,
-            (F.col("window_start") + secs).alias("key"),
-            F.lit(period_minutes).cast("long").alias("period"),
-            F.lit(alpha).alias("alpha"),
-            "current",
-            "n_trades",
-        )
+    ewma = windowed_ewma(
+        trades.withColumn("event_time", F.timestamp_millis(F.col("timestamp"))),
+        ts_col="event_time",
+        value_col="price",
+        order_cols=("timestamp", "trade_seq"),
+        group_cols=group,
+        period_minutes=period_minutes,
+    )
+    return ewma.select(
+        *group,
+        F.col("window_end").alias("key"),
+        F.lit(period_minutes).cast("long").alias("period"),
+        F.lit(ewma_alpha(period_minutes)).alias("alpha"),
+        F.col("ewma").alias("current"),
+        F.col("n_rows").alias("n_trades"),
     )
 
 
 def frame_trades_avro(trades: DataFrame, schema_id: int = 7) -> DataFrame:
     """raw-producer with the REAL wire format: each trade Avro-binary-
     encoded (pure-python codec, spec-conformant — cross-checked against
-    the Java Avro library in tests) behind the Confluent 5-byte frame."""
+    the Java Avro library in tests) behind the Confluent 5-byte frame.
+    Nulls of nullable fields are written as the union's null branch."""
     import pandas as pd
 
-    from ..schemas import TRADE_SCHEMA
     from .avro_codec import TRADES_AVRO_SCHEMA, encode
 
     cols = [f.name for f in TRADE_SCHEMA.fields]
+    nullable = [
+        f["name"]
+        for f in TRADES_AVRO_SCHEMA["fields"]
+        if isinstance(f["type"], list) and "null" in f["type"]
+    ]
     prefix = b"\x00" + schema_id.to_bytes(4, "big")
 
     def enc(batches):
         for pdf in batches:
+            # Arrow hands a null double over as NaN, which the union's
+            # double branch would accept: give the encoder None instead
+            for c in nullable:
+                pdf[c] = pdf[c].astype(object).where(pdf[c].notna(), None)
             values = [
                 prefix + encode(TRADES_AVRO_SCHEMA, dict(zip(cols, row)))
                 for row in pdf[cols].itertuples(index=False, name=None)
@@ -159,29 +164,6 @@ def frame_trades_avro(trades: DataFrame, schema_id: int = 7) -> DataFrame:
             )
 
     return trades.mapInPandas(enc, "key string, value binary")
-
-
-def decode_trades_avro(framed: DataFrame) -> DataFrame:
-    """Consumer for Avro-framed messages: strip the frame, binary-decode
-    each record, restore the trade schema + event_time."""
-    import pandas as pd
-
-    from ..schemas import TRADE_SCHEMA
-    from .avro_codec import TRADES_AVRO_SCHEMA, decode
-
-    cols = [f.name for f in TRADE_SCHEMA.fields]
-
-    def dec(batches):
-        for pdf in batches:
-            rows = []
-            for raw in pdf["value"]:
-                body = bytes(raw)[5:]
-                rec, _ = decode(TRADES_AVRO_SCHEMA, body)
-                rows.append(tuple(rec[c] for c in cols))
-            yield pd.DataFrame(rows, columns=cols)
-
-    out = framed.mapInPandas(dec, TRADE_SCHEMA)
-    return out.withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
 
 
 def decode_trades_avro_dispatch(

@@ -94,34 +94,58 @@ def test_windowed_ewma_window_boundaries(spark):
     assert out[starts[1]]["ewma"] == pytest.approx(a * 20.0)
 
 
-def test_closed_form_equals_fold(spark, sf_dir):
-    """windowed_ewma_closed_form == windowed_ewma at 6 decimals on the
-    full events table (every group/window), both orderings."""
-    from pyspark.sql import functions as F
-
-    from kafka_stream_aggregator_spark.indicators import (
-        windowed_ewma,
-        windowed_ewma_closed_form,
+def _fold_per_window(df, group_cols, order_cols, period_minutes=5):
+    """The streaming aggregate run on a batch DataFrame: the
+    ordered_values fold per F.window window."""
+    alpha = ewma_alpha(period_minutes)
+    return df.groupBy(
+        F.window("ts", f"{period_minutes} minutes").alias("win"), *group_cols
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        ewma_fold(ordered_values("value", list(order_cols)), alpha).alias("ewma"),
+    ).select(
+        *group_cols,
+        F.unix_timestamp("win.start").alias("window_start"),
+        "n_rows",
+        "ewma",
     )
+
+
+def test_closed_form_equals_fold(spark, sf_dir):
+    """Batch windowed_ewma (the reverse-rank closed form) == the fold it
+    runs on a stream, at 6 decimals on the full events table (every
+    group/window, non-positive windows dropped on both sides)."""
     from kafka_stream_aggregator_spark.tables import load_table
 
     e = load_table(spark, sf_dir, "events")
-    args = dict(
-        ts_col="ts",
-        value_col="value",
-        order_cols=("ts", "event_id"),
-        group_cols=("event_type",),
-        period_minutes=5,
+    a = _fold_per_window(e, ["event_type"], ["ts", "event_id"]).filter("ewma > 0")
+    b = windowed_ewma(e, group_cols=("event_type",), period_minutes=5).select(
+        "event_type", "window_start", "n_rows", "ewma"
     )
-    a = windowed_ewma(e, **args).select(
-        "event_type", "window_start", "n_rows", F.round("ewma", 6).alias("x")
-    )
-    b = windowed_ewma_closed_form(e, **args).select(
-        "event_type", "window_start", "n_rows", F.round("ewma", 6).alias("x")
+    a, b = (
+        x.withColumn("ewma", F.round("ewma", 6)) for x in (a, b)
     )
     assert a.count() == b.count() > 0
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_tied_order_keys_take_the_fold_value(spark):
+    """Two rows sharing (ts, event_id): the batch rank breaks the tie on
+    value exactly as the fold's array_sort does, so windowed_ewma gives
+    the fold's value whichever row comes first (the other order would
+    differ by alpha^2 x 99)."""
+    tied = [(7, "2024-01-01 00:01:00", 100.0), (7, "2024-01-01 00:01:00", 1.0)]
+    want = ref_ewma([5.0, 1.0, 100.0], ewma_alpha(5))
+    for rows in (tied, tied[::-1]):
+        df = spark.createDataFrame(
+            [(3, "2024-01-01 00:00:30", 5.0), *rows],
+            "event_id long, ts string, value double",
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        got = windowed_ewma(df, period_minutes=5).first()["ewma"]
+        fold = _fold_per_window(df, [], ["ts", "event_id"]).first()["ewma"]
+        assert got == pytest.approx(want, rel=1e-12)
+        assert got == pytest.approx(fold, rel=1e-12)
 
 
 def test_holt_preserves_key_types(spark):

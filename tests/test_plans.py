@@ -353,6 +353,13 @@ def test_shj_build_side_guard(spark, sf_dir):
     statistics estimate (no reliance on absolute testdata sizes)."""
     from kafka_stream_aggregator_spark.tables import load_table
 
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # with one partition the SHJ window (threshold < est <= threshold x
+    # partitions) is empty and the first half of the guard cannot hold
+    assert n_part >= 2, (
+        f"spark.sql.shuffle.partitions = {n_part}: this test needs >= 2"
+    )
+
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity"
     )
@@ -363,7 +370,6 @@ def test_shj_build_side_guard(spark, sf_dir):
     est = int(
         o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # bound below the estimate but local map still fits
@@ -426,3 +432,43 @@ def test_minhash_doc_table_matches_signatures(spark, sf_dir):
     agg = minhash_signatures(d, "doc_id", "text")
     assert hof.exceptAll(agg).count() == 0
     assert agg.exceptAll(hof).count() == 0
+
+
+def test_win_cumulative_ewma_twin_matches_helper(spark, sf_dir):
+    """The SQL twin in win_cumulative_ewma equals the Column helper it
+    stands in for, indicators.cumulative_ewma_col, row for row."""
+    from kafka_stream_aggregator_spark.indicators import (
+        cumulative_ewma_col,
+        ewma_alpha,
+    )
+
+    e = load_table(spark, sf_dir, "events")
+    helper = e.select(
+        "user_id",
+        "event_id",
+        F.round(
+            cumulative_ewma_col("value", ewma_alpha(5), ["user_id"], ["ts", "event_id"]),
+            6,
+        ).alias("ewma"),
+    )
+    twin = REGISTRY["win_cumulative_ewma"].fn(spark, sf_dir)
+    assert twin.count() == helper.count() > 0
+    assert twin.exceptAll(helper).count() == 0
+    assert helper.exceptAll(twin).count() == 0
+
+
+def test_sessionize_gap_twin_matches_helper(spark, sf_dir):
+    """The SQL twin in sessionize_gap equals ops.sessionize (30-minute
+    gap, (ts, event_id) order) grouped to per-session counts."""
+    from kafka_stream_aggregator_spark.ops import sessionize
+
+    e = load_table(spark, sf_dir, "events")
+    helper = (
+        sessionize(e, gap_seconds=1800)
+        .groupBy("user_id", "session_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    twin = REGISTRY["sessionize_gap"].fn(spark, sf_dir)
+    assert twin.count() == helper.count() > 0
+    assert twin.exceptAll(helper).count() == 0
+    assert helper.exceptAll(twin).count() == 0

@@ -640,80 +640,6 @@ def test_streaming_dedup_within_watermark(spark, events_dir):
     assert n == batch_n
 
 
-def test_continuous_ewma_tws_matches_v1(spark, events_dir):
-    """The state-v2 (transformWithStateInPandas) EWMA equals the
-    applyInPandasWithState version and the NumPy fold. Needs the
-    RocksDB state store provider — set for this query only.
-
-    Skipped where protobuf is unavailable: state-v2's Python worker
-    protocol imports google.protobuf (StateMessage_pb2), which this
-    container does not ship. The plan construction itself (analysis,
-    schema) is still exercised below before the skip."""
-    from kafka_stream_aggregator_spark.streaming.stateful import (
-        continuous_ewma_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        # analysis-only coverage: the TWS plan must still build
-        a = ewma_alpha(5)
-        stream = file_stream(spark, events_dir, EVENTS_SCHEMA)
-        sdf = continuous_ewma_tws(stream, a, key_cols=("user_id",))
-        assert [f.name for f in sdf.schema.fields] == [
-            "user_id", "ewma", "n_seen", "finalized",
-        ]
-        pytest.skip("google.protobuf absent: state-v2 worker cannot run here")
-
-    prior = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        a = ewma_alpha(5)
-        stream = file_stream(spark, events_dir, EVENTS_SCHEMA)
-        sdf = continuous_ewma_tws(stream, a, key_cols=("user_id",))
-        out = _run(spark, sdf, "s_tws", mode="update")
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-    from pyspark.sql import Window as W
-
-    final = (
-        out.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-            ),
-        )
-        .filter("rn = 1")
-        .select("user_id", "ewma", "n_seen")
-    )
-    got = {r["user_id"]: (r["n_seen"], round(r["ewma"], 9)) for r in final.collect()}
-
-    pdf = (
-        spark.read.parquet(events_dir)
-        .select("user_id", "ts", "event_id", "value")
-        .toPandas()
-        .sort_values(["user_id", "ts", "event_id"])
-    )
-    want = {}
-    for uid, grp in pdf.groupby("user_id"):
-        cur = 0.0
-        for x in grp["value"]:
-            cur = a * float(x) + (1 - a) * cur
-        want[uid] = (len(grp), round(cur, 9))
-    assert got == want
-
-
 def test_rowwise_signature_equals_batch(spark, sf_dir):
     """The streaming per-row signature must be bit-identical to the
     batch minhash_signatures construction."""

@@ -122,11 +122,23 @@ def test_avro_codec_roundtrip_and_java_crosscheck(spark):
     assert abs(jrec.get("price") - 41999.75) < 1e-12
 
 
+def _decode_avro(framed):
+    """The Avro consumer over a one-entry registry snapshot: id 7, the
+    id frame_trades_avro writes by default."""
+    from kafka_stream_aggregator_spark.streaming.avro_codec import TRADES_AVRO_SCHEMA
+    from kafka_stream_aggregator_spark.streaming.trade_pipeline import (
+        decode_trades_avro_dispatch,
+    )
+
+    return decode_trades_avro_dispatch(
+        framed, {7: TRADES_AVRO_SCHEMA}, TRADES_AVRO_SCHEMA, TRADE_SCHEMA
+    )
+
+
 def test_avro_framed_chain_equals_json_chain(spark):
     """The full trade chain over REAL Avro frames produces identical
     EWMA output to the JSON-framed chain."""
     from kafka_stream_aggregator_spark.streaming.trade_pipeline import (
-        decode_trades_avro,
         frame_trades_avro,
     )
 
@@ -137,6 +149,42 @@ def test_avro_framed_chain_equals_json_chain(spark):
     }
     via_avro = {
         tuple(r)
-        for r in aggregate_trades(decode_trades_avro(frame_trades_avro(trades))).collect()
+        for r in aggregate_trades(_decode_avro(frame_trades_avro(trades))).collect()
     }
     assert via_avro == via_json and len(via_avro) > 0
+
+
+def test_avro_frames_encode_null_as_null(spark):
+    """A null `iv` is written as the union's null branch, not as NaN:
+    the Avro chain decodes every TRADE_SCHEMA column to the JSON chain's
+    values, with `iv` back as None."""
+    import math
+
+    from kafka_stream_aggregator_spark.streaming.avro_codec import (
+        TRADES_AVRO_SCHEMA,
+        decode,
+    )
+    from kafka_stream_aggregator_spark.streaming.trade_pipeline import (
+        frame_trades_avro,
+    )
+
+    cols = [f.name for f in TRADE_SCHEMA.fields]
+    trades = synthetic_trades(spark, n=200)  # every 5th trade has a null iv
+    framed = frame_trades_avro(trades)
+    raw = {
+        rec["trade_seq"]: rec
+        for rec in (
+            decode(TRADES_AVRO_SCHEMA, bytes(r["value"])[5:])[0]
+            for r in framed.collect()
+        )
+    }
+    assert sum(rec["iv"] is None for rec in raw.values()) == 40
+    assert not any(
+        isinstance(rec["iv"], float) and math.isnan(rec["iv"]) for rec in raw.values()
+    )
+    via_avro = sorted(map(tuple, _decode_avro(framed).select(*cols).collect()))
+    via_json = sorted(
+        map(tuple, decode_trades(frame_trades(trades)).select(*cols).collect())
+    )
+    assert via_avro == via_json
+    assert sum(r[cols.index("iv")] is None for r in via_avro) == 40

@@ -61,6 +61,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         print(f"{label}: {time.time()-t0:.1f}s")
 
+    # batch input: windowed_ewma runs its reverse-rank closed form
     tt("windowed_ewma(5min, by type)", windowed_ewma(
         ev, group_cols=("event_type",), period_minutes=5))
     tt("cumulative_ewma(by user)", ev.select(
@@ -76,16 +77,11 @@ def main() -> None:
     tt("topk_per_user", ev.groupBy("user_id").agg(
         F.max("value"), F.percentile_approx("value", 0.5)))
 
-    from kafka_stream_aggregator_spark.indicators import (
-        windowed_ewma_closed_form,
-    )
     from kafka_stream_aggregator_spark.ops import (
         exact_percentiles,
         exact_percentiles_bucketed,
     )
 
-    tt("windowed_ewma_closed_form", windowed_ewma_closed_form(
-        ev, group_cols=("event_type",), period_minutes=5))
     # continuous column, 5 groups, 10M rows: the built-in exact
     # Percentile would buffer ~2M-entry counts-maps per group; the
     # sort tier holds O(1) reducer memory, the bucketed tier adds full
