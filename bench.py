@@ -89,6 +89,10 @@ def run_one_launch(sf_dir: str, sf, cpus: int) -> dict:
         "passes": 2,
         "n_queries": len(names),
         "sf": sf,
+        # the parallelism the launch really had, read after its queries ran
+        "master": spark.sparkContext.master,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "spark.sql.shuffle.partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
 
 
@@ -139,6 +143,8 @@ def main() -> None:
                 "launch_totals": [r["value"] for r in results],
                 "n_queries": results[0]["n_queries"],
                 "sf": sf,
+                **{k: results[0][k] for k in
+                   ("master", "defaultParallelism", "spark.sql.shuffle.partitions")},
             }
         )
     )

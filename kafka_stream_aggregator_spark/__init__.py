@@ -15,6 +15,16 @@ Layout:
   streaming/     Structured Streaming layer (sources, EWMA pipeline, state)
   llm/           LLM-data-pipeline ops (dedup, similarity, text, multimodal)
   plans/         TOML pipeline runner (reference config.rs parity)
+
+Importing the package installs `zipimport_cache`. A UDF that calls
+package code (the Avro decode does) imports the package inside the
+Python worker, so from a reused worker's second task on, Spark's
+per-task `importlib.invalidate_caches()` no longer re-reads unchanged
+zip archives.
 """
+
+from . import zipimport_cache as _zipimport_cache
+
+_zipimport_cache.install()
 
 __version__ = "0.1.0"

@@ -10,7 +10,6 @@ its end; the unfinalized tail is excluded on both sides).
 
 from __future__ import annotations
 
-import os
 import tempfile
 import uuid
 
@@ -22,6 +21,7 @@ from ..schemas import EVENTS_SCHEMA
 from ..streaming.pipeline import streaming_dedup, streaming_windowed_ewma
 from ..sketches import U64_SQL_TEMPLATE as _U64
 from ..streaming.sources import file_stream
+from ..tables import table_path
 from .base import query, t
 
 _A5 = ewma_alpha(5)
@@ -213,16 +213,20 @@ def stream_neardup_pairs(spark, sf_dir):
     # overhead dominates instead and DIVIDES with partitions, so big
     # tiers keep the session/cluster default. The knob binds at
     # (fresh) checkpoint creation, so this is per-run.
+    # The per-task share of that spin-up cost shrank once
+    # `zipimport_cache` stopped Spark's per-task invalidate_caches()
+    # from re-reading zip archives (docs/SCALING.md "Python
+    # boundaries"); the 4-partition choice predates that and was not
+    # re-measured.
     # Round-13 (VERDICT r12 minor #5): the tier probe reads the parquet
     # footer's row count driver-side (no Spark job) instead of running
     # a count() job per invocation; falls back to count() for
-    # non-file-backed inputs.
+    # non-file-backed inputs. `docs` is the unfiltered `documents`
+    # table, so the footer is read from the path its loader reads.
     try:
         import pyarrow.parquet as pq
 
-        n_docs = pq.ParquetFile(
-            os.path.join(sf_dir, "documents.parquet")
-        ).metadata.num_rows
+        n_docs = pq.ParquetFile(table_path(sf_dir, "documents")).metadata.num_rows
     except Exception:
         n_docs = docs.count()
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -10,9 +10,18 @@ union, record, array, map — so the engine can speak the real wire
 format end-to-end. Correctness is cross-checked in tests against the
 JAVA Avro library bundled with Spark (decoding our bytes via py4j).
 
-Spark integration is Arrow-batched mapInPandas (the sanctioned python
-hot path); when a spark-avro jar is present, from_avro/to_avro replace
-these with JVM expressions — same frames, same bytes.
+`decode` raises on bodies the binary encoding cannot hold instead of
+passing them on: a varint longer than 10 bytes (bits above 64 are
+dropped, as in Java Avro), an int outside 32 bits, a union or enum
+index out of range (negative ones included), and a string or bytes
+length that is negative or runs past the buffer.
+
+It is the per-record reference. The consumer's hot path,
+`registry.decode_framed_batch`, reads a whole Arrow batch column by
+column and is tested against it; records whose writer schema holds
+arrays, maps or nested records still decode here, one at a time.
+Spark's own `from_avro` cannot stand in without the separate
+spark-avro module (docs/COVERAGE.md).
 """
 
 from __future__ import annotations
@@ -35,6 +44,7 @@ def _zigzag_encode(n: int) -> bytes:
 
 
 def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
+    """At most 10 bytes; bits above 64 are dropped, as in Java Avro."""
     shift = 0
     acc = 0
     while True:
@@ -44,7 +54,26 @@ def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             break
         shift += 7
+        if shift > 63:
+            raise ValueError("varint longer than 10 bytes")
+    acc &= 0xFFFF_FFFF_FFFF_FFFF
     return (acc >> 1) ^ -(acc & 1), pos
+
+
+def _index(buf: bytes, pos: int, n: int) -> tuple[int, int]:
+    """A union branch or enum symbol index, checked against `n`."""
+    idx, pos = _zigzag_decode(buf, pos)
+    if not 0 <= idx < n:
+        raise ValueError(f"index {idx} out of range 0..{n - 1}")
+    return idx, pos
+
+
+def _length(buf: bytes, pos: int) -> tuple[int, int]:
+    """A string or bytes length, checked against the buffer."""
+    n, pos = _zigzag_decode(buf, pos)
+    if not 0 <= n <= len(buf) - pos:
+        raise ValueError(f"length {n} out of range at byte {pos}")
+    return n, pos
 
 
 def _branch_matches(branch: Any, value: Any) -> bool:
@@ -136,7 +165,7 @@ def decode(schema: Any, buf: bytes, pos: int = 0) -> tuple[Any, int]:
     if isinstance(schema, str):
         t = schema
     elif isinstance(schema, list):
-        idx, pos = _zigzag_decode(buf, pos)
+        idx, pos = _index(buf, pos, len(schema))
         return decode(schema[idx], buf, pos)
     else:
         t = schema["type"]
@@ -145,20 +174,25 @@ def decode(schema: Any, buf: bytes, pos: int = 0) -> tuple[Any, int]:
         return None, pos
     if t == "boolean":
         return buf[pos] == 1, pos + 1
-    if t in ("int", "long"):
+    if t == "int":
+        v, pos = _zigzag_decode(buf, pos)
+        if not -(2**31) <= v < 2**31:
+            raise ValueError(f"int {v} out of 32-bit range")
+        return v, pos
+    if t == "long":
         return _zigzag_decode(buf, pos)
     if t == "float":
         return struct.unpack_from("<f", buf, pos)[0], pos + 4
     if t == "double":
         return struct.unpack_from("<d", buf, pos)[0], pos + 8
     if t == "string":
-        n, pos = _zigzag_decode(buf, pos)
+        n, pos = _length(buf, pos)
         return buf[pos : pos + n].decode("utf-8"), pos + n
     if t == "bytes":
-        n, pos = _zigzag_decode(buf, pos)
+        n, pos = _length(buf, pos)
         return bytes(buf[pos : pos + n]), pos + n
     if t == "enum":
-        idx, pos = _zigzag_decode(buf, pos)
+        idx, pos = _index(buf, pos, len(schema["symbols"]))
         return schema["symbols"][idx], pos
     if t == "record":
         rec = {}

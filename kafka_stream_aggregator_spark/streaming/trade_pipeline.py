@@ -11,10 +11,11 @@ This module reproduces that chain on Spark against any source that
 yields framed binary messages (Kafka's value column, or the synthetic
 generator below for tests). Payloads sit behind the Confluent-style
 5-byte frame, as JSON bodies (`frame_trades` / `decode_trades`, decoded
-in the JVM) or Avro bodies (`frame_trades_avro` /
-`decode_trades_avro_dispatch`, the pure-python codec, each record
-decoded by its frame's schema id). The EWMA is `aggregate_trades`, a
-projection of `indicators.windowed_ewma`.
+in the JVM) or Avro bodies (`frame_trades_avro`, encoded per record by
+the pure-python codec; `decode_trades_avro_dispatch`, a mapInArrow that
+decodes each Arrow batch column by column, each frame by its own
+schema id). The EWMA is `aggregate_trades`, a projection of
+`indicators.windowed_ewma`.
 """
 
 from __future__ import annotations
@@ -182,22 +183,24 @@ def decode_trades_avro_dispatch(
 
     The snapshot is a plain dict riding the closure (one copy per task,
     like a broadcast dim); malformed/unknown-id records are dropped but
-    the stream advances — the reference's behavior for decode errors."""
-    import pandas as pd
+    the stream advances — the reference's behavior for decode errors.
+    Each Arrow batch is decoded whole by `registry.decode_framed_batch`
+    (mapInArrow, no pandas)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .registry import decode_framed_records
+    from .registry import decode_framed_batch
 
     cols = [f.name for f in out_schema.fields]
+    arrow_schema = to_arrow_schema(out_schema)
 
     def dec(batches):
-        for pdf in batches:
-            recs = decode_framed_records(
-                pdf["value"], registry_snapshot, reader_schema
+        for batch in batches:
+            out, _ = decode_framed_batch(
+                batch.column("value"), registry_snapshot, reader_schema
             )
-            rows = [tuple(r[c] for c in cols) for r in recs if r is not None]
-            yield pd.DataFrame(rows, columns=cols)
+            yield out.select(cols).cast(arrow_schema)
 
-    out = framed.mapInPandas(dec, out_schema)
+    out = framed.mapInArrow(dec, out_schema)
     if "timestamp" in cols:
         out = out.withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
     return out

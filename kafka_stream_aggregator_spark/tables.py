@@ -34,6 +34,11 @@ def _normalize(df: DataFrame) -> DataFrame:
     return df.withColumns(casts) if casts else df
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The parquet file `load_table` reads for table `name`."""
+    return f"{sf_dir}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Memoized per session: DataFrames are immutable logical plans, and
     # re-reading costs a file listing + footer/schema pass per call —
@@ -62,7 +67,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_CPUS", "32"),
         )
-    path = f"{sf_dir}/{name}.parquet"
+    path = table_path(sf_dir, name)
     if name == "events":
         spark.conf.set(NANOS_CONF, "true")
         df = spark.read.parquet(path)

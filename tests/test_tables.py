@@ -24,7 +24,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from kafka_stream_aggregator_spark.tables import load_table
+from kafka_stream_aggregator_spark.tables import load_table, table_path
 from kafka_stream_aggregator_spark.schemas import TESTDATA_TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -68,6 +68,15 @@ def test_events_ts_loads_as_timestamp(spark, tmp_path, enc):
     # The cast sites downstream require epoch math to work:
     secs = [r[0] for r in df.selectExpr("cast(ts as double)").orderBy("ts").collect()]
     assert secs == [1_700_000_000.0, 1_700_000_060.0, 1_700_003_600.0]
+
+
+def test_table_path_is_the_file_load_table_reads(spark, tmp_path):
+    """Footer probes read `table_path`; it must be what the loader reads."""
+    d = str(tmp_path)
+    pq.write_table(pa.table({"doc_id": pa.array([1, 2, 3], pa.int64())}),
+                   table_path(d, "documents"))
+    assert pq.ParquetFile(table_path(d, "documents")).metadata.num_rows == 3
+    assert load_table(spark, d, "documents").count() == 3
 
 
 def test_live_testdata_schema_canary(spark):
