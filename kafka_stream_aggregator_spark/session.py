@@ -10,6 +10,7 @@ oracle), Arrow enabled for the pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +26,25 @@ def env_flag(name: str) -> bool:
     return os.environ.get(name, "").strip().lower() in ("1", "true", "yes", "on")
 
 
+def local_resources(
+    cpus: int | None,
+    environ: Mapping[str, str],
+    host_cpus: int,
+    host_mem_bytes: int,
+) -> tuple[int, str]:
+    """``(n, driver_memory)`` for a ``local[n]`` session.
+
+    ``n`` is ``cpus``, else $SPARK_GRAFT_CPUS, else ``host_cpus``; the
+    driver memory is $SPARK_DRIVER_MEM, else half of ``host_mem_bytes``
+    (at least 1g). In local mode the driver JVM is also the executor, so
+    its heap holds every task's memory; the other half is left to the
+    Python workers and the OS.
+    """
+    n = int(cpus or environ.get("SPARK_GRAFT_CPUS") or host_cpus)
+    mem = environ.get("SPARK_DRIVER_MEM") or f"{max(1024, (host_mem_bytes // 2) >> 20)}m"
+    return n, mem
+
+
 def get_spark(
     app_name: str = "kafka_stream_aggregator_spark",
     cpus: int | None = None,
@@ -33,11 +53,27 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32. On a
-    real cluster you would drop ``.master`` and let the submitter decide;
-    every other conf below still applies.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract), else the
+    CPUs this process may run on (``os.sched_getaffinity``); the driver
+    memory to $SPARK_DRIVER_MEM, else half the host's physical RAM (see
+    ``local_resources``). ``extra`` overrides any conf below, the driver
+    memory included.
+
+    Streaming checkpoints commit by a plain rename on Hadoop's own
+    ``LocalFileSystem``, with no child process per file (the last two
+    confs; docs/SCALING.md, "Checkpoint I/O on a local filesystem").
+
+    On a real cluster you would drop ``.master`` and let the submitter
+    decide, and drop those two checkpoint confs: on HDFS or an object
+    store Spark's default checkpoint manager is the one that fits. Every
+    other conf below still applies.
     """
-    n = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n, driver_mem = local_resources(
+        cpus,
+        os.environ,
+        len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+    )
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -65,12 +101,30 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config(NANOS_CONF, "true")
         # 128 MB parquet split target: big enough to amortize task overhead
         # at 100 TB (≈800k tasks), small enough to fit executor memory.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Checkpoint commits on the local filesystem, for this local-mode
+        # session. Spark's default manager goes through FileContext,
+        # which checks for a symlink before each temp-file rename; without
+        # libhadoop every check is a forked `readlink` (94 per 4k-trade
+        # JSON batch, 4 state partitions x delta + checksum files plus
+        # the offset, commit and file-source logs). The FileSystem-based
+        # manager renames with rename(2). It needs Hadoop's own
+        # LocalFileSystem for file:, which the bundled hive-exec jar
+        # otherwise replaces (ServiceLoader) with ProxyLocalFileSystem,
+        # whose rename refuses an existing target: an overwriting commit
+        # would then keep the stale file. Both pins are tested in
+        # tests/test_checkpoint_io.py.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
     )
     if extra:
         for k, v in extra.items():

@@ -151,7 +151,21 @@ class ProgressListener:
                     {
                         "batchId": p.batchId,
                         "numInputRows": p.numInputRows,
+                        "inputRowsPerSecond": p.inputRowsPerSecond,
+                        "processedRowsPerSecond": p.processedRowsPerSecond,
                         "durationMs": dict(p.durationMs),
+                        # absent until a query with a watermark has one
+                        "watermark": p.eventTime.get("watermark"),
+                        "stateOperators": [
+                            {
+                                "operatorName": op.operatorName,
+                                "numRowsTotal": op.numRowsTotal,
+                                "memoryUsedBytes": op.memoryUsedBytes,
+                                "commitTimeMs": op.commitTimeMs,
+                                "numRowsDroppedByWatermark": op.numRowsDroppedByWatermark,
+                            }
+                            for op in p.stateOperators
+                        ],
                     }
                 )
 

@@ -335,16 +335,44 @@ def test_progress_listener(spark, events_dir):
     lis = ProgressListener().attach(spark)
     try:
         stream = file_stream(spark, events_dir, EVENTS_SCHEMA)
-        q = start_to_memory(stream.select("event_id"), "s_listener")
+        sdf = streaming_windowed_ewma(stream, group_cols=("event_type",))
+        q = start_to_memory(sdf, "s_listener")
         q.awaitTermination()
         import time
 
-        for _ in range(20):  # listener events are async
-            if lis.progress:
+        # listener events are async; availableNow ends with a no-data
+        # batch that moves the watermark, so wait for the last batch
+        last = q.lastProgress["batchId"]
+        for _ in range(40):
+            if any(p["batchId"] == last for p in lis.progress):
                 break
             time.sleep(0.5)
         assert lis.started
-        assert any(p["numInputRows"] > 0 for p in lis.progress)
+        data = [p for p in lis.progress if p["numInputRows"] > 0]
+        assert data
+        assert all(p["processedRowsPerSecond"] > 0 for p in data)
+        assert all(p["inputRowsPerSecond"] >= 0 for p in data)
+        assert {"addBatch", "walCommit", "triggerExecution"} <= set(data[0]["durationMs"])
+        # the final watermark is the max event time less the 10-minute delay
+        want_wm = (
+            spark.read.parquet(events_dir)
+            .select(
+                F.date_format(
+                    F.max("ts") - F.expr("INTERVAL 10 MINUTES"),
+                    "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+                )
+            )
+            .first()[0]
+        )
+        final = lis.progress[-1]
+        assert final["batchId"] == last
+        assert final["watermark"] == want_wm
+        (op,) = final["stateOperators"]
+        assert op["operatorName"] == "stateStoreSave"
+        assert op["numRowsTotal"] > 0 and op["memoryUsedBytes"] > 0
+        assert op["commitTimeMs"] >= 0
+        # one data batch, read before any watermark existed: nothing late
+        assert op["numRowsDroppedByWatermark"] == 0
     finally:
         lis.detach(spark)
 
