@@ -97,11 +97,13 @@ def run_one_launch(sf_dir: str, sf, cpus: int) -> dict:
 
 
 def main() -> None:
+    from kafka_stream_aggregator_spark.session import local_resources
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_s = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf_s) if sf_s.replace(".", "").isdigit() else sf_s
-    # the thread count get_spark gives local[n] (session.local_resources)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    # the thread count get_spark gives local[n]
+    cpus, _ = local_resources()
 
     if os.environ.get("KSA_BENCH_CHILD") == "1":
         print(json.dumps(run_one_launch(sf_dir, sf, cpus)))

@@ -13,9 +13,10 @@ Reference parity (SURVEY.md S1-S5):
 to > 0" — the flagship batch query, the streaming pipeline and the trade
 pipeline all build on it. On a stream it runs the fold
 (`ewma_fold(ordered_values(...))`); on a batch DataFrame it runs the
-fold's reverse-rank closed form. `windowed_ewma_two_level` splits very
-large windows into segments and recombines them with
-`combine_segments`; `cumulative_ewma_col` is the cross-window variant.
+fold's reverse-rank closed form. `windowed_ewma_two_level` is the one
+two-level builder, batch or streaming: it folds `F.window` sub-windows
+and recombines them into the period window with `combine_segments`.
+`cumulative_ewma_col` is the cross-window variant.
 
 Everything here except `holt_smoothing` is a pure Catalyst expression
 (higher-order functions, window functions) — no UDFs, so the work stays
@@ -180,9 +181,8 @@ def cumulative_ewma_col(
     Closed form S_i = alpha * lam^i * sum_j(x_j * lam^-j) over a running
     window — one shuffle, JVM-side, no python. lam^-i overflows past
     ~100k rows per key (lam = 1 - 2/301), so this is the fast path for
-    bounded key cardinality; for unbounded keys use the grouped-map fold
-    (queries/windows.py win_cumulative_ewma docstring) or the streaming
-    stateful op (streaming/stateful.py), both O(1) memory per row.
+    bounded rows per key; for unbounded keys use the streaming stateful
+    fold ``streaming.stateful.continuous_ewma``, O(1) state per key.
     """
     from pyspark.sql import Window as W
 
@@ -199,48 +199,45 @@ def windowed_ewma_two_level(
     df: DataFrame,
     ts_col: str = "ts",
     value_col: str = "value",
-    tiebreak_col: str = "event_id",
+    order_cols: Sequence[str] = ("ts", "event_id"),
     group_cols: Sequence[str] = (),
     period_minutes: int = 5,
+    sub_window: str = "30 seconds",
     emit_positive_only: bool = True,
-    sub_bucket_seconds: int = 1,
 ) -> DataFrame:
-    """windowed_ewma for windows too large to collect on one reducer.
+    """windowed_ewma for windows too large to collect on one reducer,
+    batch or streaming.
 
-    Folds per (group, window, sub-second-bucket) first — bounded
-    arrays, map-side partials — then combines the per-bucket partials
-    (n, S) in bucket order with ``combine_segments``. Two shuffles,
-    O(rows-per-sub-bucket) peak memory instead of O(rows-per-window):
-    the shape that survives a window holding billions of rows at 100 TB.
-    Same values as windowed_ewma up to rounding: the composition
-    regroups the fold's arithmetic.
+    Folds per (``sub_window``, group) first — bounded arrays, map-side
+    partials — then re-windows the partials by ``window_time`` into
+    ``period_minutes`` windows and combines them (n, S) in sub-window
+    order with ``combine_segments``. Both levels are ``F.window``, so on
+    a watermarked stream this is two chained stateful aggregations
+    (Spark >= 3.5) whose state holds sub-window partials, never a whole
+    window's rows. Same output columns as windowed_ewma, and the same
+    values up to rounding: the composition regroups the fold's
+    arithmetic. ``sub_window`` must divide the period.
     """
     alpha = ewma_alpha(period_minutes)
-    secs = period_minutes * 60
-    wstart = (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
-    sub = (
-        F.floor(F.unix_timestamp(F.col(ts_col)) / sub_bucket_seconds)
-        * sub_bucket_seconds
-    ).cast("long")
-
-    partials = (
-        df.withColumn("window_start", wstart)
-        .withColumn("__sub", sub)
-        .groupBy(*group_cols, "window_start", "__sub")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            ewma_fold(
-                ordered_values(value_col, [ts_col, tiebreak_col]), alpha
-            ).alias("__s"),
-        )
+    partials = df.groupBy(
+        F.window(F.col(ts_col), sub_window).alias("subwin"), *group_cols
+    ).agg(
+        F.count(F.lit(1)).alias("__n"),
+        ewma_fold(ordered_values(value_col, list(order_cols)), alpha).alias("__s"),
     )
     out = (
-        partials.groupBy(*group_cols, "window_start")
-        .agg(combine_segments(F.col("__sub"), alpha).alias("__c"))
+        partials.withColumn("substart", F.col("subwin.start"))
+        .groupBy(
+            F.window(F.window_time("subwin"), f"{period_minutes} minutes").alias(
+                "win"
+            ),
+            *group_cols,
+        )
+        .agg(combine_segments(F.col("substart"), alpha).alias("__c"))
         .select(
             *group_cols,
-            "window_start",
-            (F.col("window_start") + secs).cast("long").alias("window_end"),
+            F.unix_timestamp("win.start").alias("window_start"),
+            F.unix_timestamp("win.end").alias("window_end"),
             F.col("__c.n").alias("n_rows"),
             F.col("__c.s").alias("ewma"),
         )

@@ -47,14 +47,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def lang_scores(text: Column) -> Column:
-    """map<lang,double> of stopword-vote scores per language."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(lg) for lg in STOPWORDS]),
-        F.array(*[stopword_ratio(text, lg) for lg in STOPWORDS]),
-    )
-
-
 def lang_id(text: Column) -> Column:
     """argmax language by stopword vote ('und' when all scores are 0)."""
     best = None

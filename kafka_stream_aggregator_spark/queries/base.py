@@ -29,15 +29,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# Append-only TRUE registration order. queries/__init__ destructively
-# reorders REGISTRY to the driver-sampling window, which made any
-# later in-process observer (tools/gen_window.py compute_order) see
-# window order instead of registration order for bucket-1 tie-breaks
-# (the r9 backlog-jump bug; ADVICE r10 low #1). This log is written
-# once per @query and never reordered, so registration order survives
-# regardless of import timing or SPARK_GRAFT_NO_REORDER.
-REGISTRATION_ORDER: list[str] = []
-
 
 def query(name: str, oracle: str | None = None, bench: bool = False):
     """Register a query. Use as @query("name", oracle=SQL)."""
@@ -46,7 +37,6 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = QuerySpec(name, fn, oracle, bench)
-        REGISTRATION_ORDER.append(name)
         return fn
 
     return deco

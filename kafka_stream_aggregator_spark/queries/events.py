@@ -273,12 +273,7 @@ def ewma_5min_twolevel(spark, sf_dir):
     from ..indicators import windowed_ewma_two_level
 
     e = t(spark, sf_dir, "events")
-    out = windowed_ewma_two_level(
-        e,
-        group_cols=("event_type",),
-        period_minutes=5,
-        sub_bucket_seconds=30,
-    )
+    out = windowed_ewma_two_level(e, group_cols=("event_type",), period_minutes=5)
     return out.select(
         "event_type",
         "window_start",

@@ -1197,7 +1197,7 @@ def stream_outer_join_unmatched(spark, sf_dir):
     """Stream-stream LEFT OUTER join under availableNow: matched
     pairs emit on match, unmatched purchases emit with NULLs at
     state expiry; the finalized-horizon filter makes both exact."""
-    from ..streaming.pipeline import stream_stream_outer_join
+    from ..streaming.pipeline import stream_stream_join
 
     p = _events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
@@ -1209,10 +1209,10 @@ def stream_outer_join_unmatched(spark, sf_dir):
         F.col("user_id").alias("r_user_id"),
         F.col("ts").alias("r_ts"),
     )
-    joined = stream_stream_outer_join(
+    joined = stream_stream_join(
         p, c, key="user_id", right_key="r_user_id",
         left_ts="ts", right_ts="r_ts",
-        watermark="10 minutes", max_lag_seconds=300,
+        watermark="10 minutes", max_lag_seconds=300, how="left_outer",
     )
     out = _run_to_df(spark, joined)
     ev = t(spark, sf_dir, "events")

@@ -27,10 +27,10 @@ def env_flag(name: str) -> bool:
 
 
 def local_resources(
-    cpus: int | None,
-    environ: Mapping[str, str],
-    host_cpus: int,
-    host_mem_bytes: int,
+    cpus: int | None = None,
+    environ: Mapping[str, str] | None = None,
+    host_cpus: int | None = None,
+    host_mem_bytes: int | None = None,
 ) -> tuple[int, str]:
     """``(n, driver_memory)`` for a ``local[n]`` session.
 
@@ -38,8 +38,16 @@ def local_resources(
     driver memory is $SPARK_DRIVER_MEM, else half of ``host_mem_bytes``
     (at least 1g). In local mode the driver JVM is also the executor, so
     its heap holds every task's memory; the other half is left to the
-    Python workers and the OS.
+    Python workers and the OS. ``environ`` defaults to ``os.environ``,
+    ``host_cpus`` to the CPUs this process may run on
+    (``os.sched_getaffinity``) and ``host_mem_bytes`` to physical RAM.
     """
+    if environ is None:
+        environ = os.environ
+    if host_cpus is None:
+        host_cpus = len(os.sched_getaffinity(0))
+    if host_mem_bytes is None:
+        host_mem_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     n = int(cpus or environ.get("SPARK_GRAFT_CPUS") or host_cpus)
     mem = environ.get("SPARK_DRIVER_MEM") or f"{max(1024, (host_mem_bytes // 2) >> 20)}m"
     return n, mem
@@ -68,12 +76,7 @@ def get_spark(
     store Spark's default checkpoint manager is the one that fits. Every
     other conf below still applies.
     """
-    n, driver_mem = local_resources(
-        cpus,
-        os.environ,
-        len(os.sched_getaffinity(0)),
-        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
-    )
+    n, driver_mem = local_resources(cpus)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)

@@ -8,8 +8,10 @@ windows + watermark (late data handled, deterministic fold order via
 (ts, tiebreak) sort — SURVEY S3/S5/S7): `streaming_windowed_ewma` is
 `indicators.windowed_ewma` under a watermark, the same function the
 batch queries use; on a stream it runs the EWMA as an array fold inside
-the stateful aggregation. Also here: the two-level (chained stateful)
-EWMA, watermarked dedup, sliding/session windows and stream joins.
+the stateful aggregation. `streaming_windowed_ewma_two_level` is
+`indicators.windowed_ewma_two_level` under a watermark (chained
+stateful aggregations). Also here: watermarked dedup, sliding/session
+windows, and one stream-stream join for inner and left-outer.
 """
 
 from __future__ import annotations
@@ -19,13 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..indicators import (
-    combine_segments,
-    ewma_alpha,
-    ewma_fold,
-    ordered_values,
-    windowed_ewma,
-)
+from ..indicators import windowed_ewma, windowed_ewma_two_level
 
 
 def streaming_windowed_ewma(
@@ -156,13 +152,19 @@ def stream_stream_join(
     right_ts: str = "r_ts",
     watermark: str = "10 minutes",
     max_lag_seconds: int = 3600,
+    how: str = "inner",
 ) -> DataFrame:
-    """Watermarked stream-stream inner join with a time-bound condition.
+    """Watermarked stream-stream join with a time-bound condition.
 
     Both sides carry watermarks and the join condition bounds the event-
     time distance, so each side's state store holds only `watermark +
     max_lag` worth of rows — bounded state, the requirement for an
-    unbounded stream pair at scale."""
+    unbounded stream pair at scale. With ``how="left_outer"`` a left
+    row whose time-bounded match window expires under the watermark is
+    emitted once with NULLs on the right — the semantics a late-arrival
+    audit needs (which purchases never saw a qualifying click?). Spark
+    emits the null rows only when the watermark closes the state, so
+    results are exact for the finalized region under availableNow."""
     lw = left.withWatermark(left_ts, watermark)
     rw = right.withWatermark(right_ts, watermark)
     cond = (
@@ -170,34 +172,7 @@ def stream_stream_join(
         & (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {max_lag_seconds} SECONDS"))
         & (F.col(right_ts) <= F.col(left_ts))
     )
-    return lw.join(rw, cond, "inner")
-
-
-def stream_stream_outer_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    right_key: str,
-    left_ts: str = "ts",
-    right_ts: str = "r_ts",
-    watermark: str = "10 minutes",
-    max_lag_seconds: int = 3600,
-) -> DataFrame:
-    """Watermarked stream-stream LEFT OUTER join: identical bounded
-    state to the inner form, but a left row whose time-bounded match
-    window expires under the watermark is emitted once with NULLs on
-    the right — the semantics a late-arrival audit needs (which
-    purchases never saw a qualifying click?). Spark emits the null
-    rows only when the watermark closes the state, so results are
-    exact for the finalized region under availableNow."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (F.col(key) == F.col(right_key))
-        & (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {max_lag_seconds} SECONDS"))
-        & (F.col(right_ts) <= F.col(left_ts))
-    )
-    return lw.join(rw, cond, "left_outer")
+    return lw.join(rw, cond, how)
 
 
 def streaming_windowed_ewma_two_level(
@@ -211,40 +186,18 @@ def streaming_windowed_ewma_two_level(
     watermark: str = "10 minutes",
     emit_positive_only: bool = True,
 ) -> DataFrame:
-    """Streaming EWMA via chained stateful aggregations (Spark >=3.5
-    multiple-stateful-operator support): fold per sub-window first
-    (bounded state per key), then re-window with window_time() and
-    combine the partials with ``combine_segments``. The streaming twin of
-    indicators.windowed_ewma_two_level — per-reducer state never holds a
-    whole 5-minute window's rows, only its sub-window partials."""
-    alpha = ewma_alpha(period_minutes)
-    partials = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), sub_window).alias("subwin"), *group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            ewma_fold(ordered_values(value_col, list(order_cols)), alpha).alias(
-                "__s"
-            ),
-        )
+    """``windowed_ewma_two_level`` under a ``watermark`` on ``ts_col``:
+    chained stateful aggregations, sub-window partials then 5-minute
+    recombination. The second operator's watermark trails the first by
+    one more delay, so a window finalizes one ``watermark`` later than
+    in ``streaming_windowed_ewma``."""
+    return windowed_ewma_two_level(
+        stream.withWatermark(ts_col, watermark),
+        ts_col=ts_col,
+        value_col=value_col,
+        order_cols=order_cols,
+        group_cols=group_cols,
+        period_minutes=period_minutes,
+        sub_window=sub_window,
+        emit_positive_only=emit_positive_only,
     )
-    out = (
-        partials.withColumn("substart", F.col("subwin.start"))
-        .groupBy(
-            F.window(F.window_time("subwin"), f"{period_minutes} minutes").alias(
-                "win"
-            ),
-            *group_cols,
-        )
-        .agg(combine_segments(F.col("substart"), alpha).alias("__c"))
-        .select(
-            *group_cols,
-            F.unix_timestamp("win.start").alias("window_start"),
-            F.unix_timestamp("win.end").alias("window_end"),
-            F.col("__c.n").alias("n_rows"),
-            F.col("__c.s").alias("ewma"),
-        )
-    )
-    if emit_positive_only:
-        out = out.filter(F.col("ewma") > 0.0)
-    return out

@@ -60,11 +60,6 @@ def confluent_schema_id(value: Column) -> Column:
     return (b(2) * 16777216 + b(3) * 65536 + b(4) * 256 + b(5)).alias("schema_id")
 
 
-def json_payload(value: Column, schema: T.StructType) -> Column:
-    """Registry-free path: JSON-encoded payloads (from_json)."""
-    return F.from_json(value.cast("string"), schema)
-
-
 def file_stream(
     spark: SparkSession,
     path: str,

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .schemas import TESTDATA_TABLES
-from .session import NANOS_CONF
+from .session import NANOS_CONF, local_resources
 
 
 def _normalize(df: DataFrame) -> DataFrame:
@@ -59,14 +59,11 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # A driver-supplied vanilla session ships Spark's 200-partition default;
     # on local[N] that's pure overhead (AQE can coalesce batch stages but is
-    # disabled for stateful streaming). Pin to the core count once.
+    # disabled for stateful streaming). Pin to the thread count get_spark
+    # would give local[n].
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        import os
-
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        )
+        n, _ = local_resources()
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
     path = table_path(sf_dir, name)
     if name == "events":
         spark.conf.set(NANOS_CONF, "true")
@@ -79,9 +76,3 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql entry)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -64,78 +64,3 @@ def test_events_epoch_math_tz_independent(spark, hostile, sf_dir):
         .collect()[0]
     )
     assert a["n"] == b["n"] and abs(a["s"] - b["s"]) < 1e-6
-
-
-def test_window_order_generated_and_fresh():
-    """The driver-sampling order is GENERATED from CORRECTNESS_r* history
-    (VERDICT r5 item 8). Pin: the committed _window.py matches what the
-    generator would produce AT ITS RECORDED CAP, every registry query is
-    covered, and the never-driver-verdicted queries sit at the head.
-
-    The cap (GENERATED_THROUGH_ROUND) makes the check tolerant of driver
-    artifacts deposited AFTER the end-of-round snapshot (VERDICT r6
-    item 1: CORRECTNESS_r06.json landed post-commit and turned the
-    committed tree red against its own freshness test). Regeneration at
-    round start advances the cap; a mid-round driver drop no longer
-    invalidates the committed file."""
-    import os
-    import sys
-
-    tools = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    )
-    sys.path.insert(0, tools)
-    import gen_window
-
-    cap = gen_window.committed_cap()
-    assert cap is not None, "missing GENERATED_THROUGH_ROUND in _window.py"
-    order, cap2 = gen_window.compute_order(max_round=cap)
-    with open(gen_window.OUT) as f:
-        committed = f.read()
-    assert committed == gen_window.render(order, cap2), (
-        "stale _window.py: rerun tools/gen_window.py"
-    )
-    assert set(order) == set(REGISTRY)
-    # registry iteration (what the driver samples) == unlisted-new-first
-    # + generated order; with a fresh file they coincide exactly
-    assert list(REGISTRY) == order
-
-
-def test_window_order_failed_rows_sort_first():
-    """VERDICT r9 top finding: a query whose LATEST driver row FAILED
-    must lead the window (ahead of never-verdicted), never-verdicted
-    queries drain in registration order, and a red row counts as a
-    failure, not a verdict. Pin the bucket logic on synthetic history
-    plus the live r8 case (agg_atkinson_index red at r8, window head
-    through cap 9)."""
-    import os
-    import sys
-
-    tools = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    )
-    sys.path.insert(0, tools)
-    import gen_window
-
-    fail_row = {"rows_match": True, "schema_match": True,
-                "hash_match": False, "err": None}
-    green_row = {"rows_match": True, "schema_match": True,
-                 "hash_match": True, "err": None}
-    weak_row = {"rows_match": None, "schema_match": None,
-                "hash_match": None, "err": "no_oracle"}
-    err_row = {"rows_match": None, "schema_match": None,
-               "hash_match": None, "err": "Py4JJavaError: boom"}
-    assert gen_window._row_failed(fail_row)
-    assert gen_window._row_failed(err_row)
-    assert not gen_window._row_failed(green_row)
-    assert not gen_window._row_failed(weak_row)  # weak verdict, not FAIL
-
-    order, cap = gen_window.compute_order(max_round=9)
-    assert cap == 9
-    # the one genuine red-latest row in r1-r9 history leads the window
-    assert order[0] == "agg_atkinson_index"
-    # bucket 1 = never-verdicted, in registration order: round-9 waves
-    # (analytics35+ modules, registered last) must NOT precede the
-    # r6-era backlog at the head of the window
-    head = order[1:50]
-    assert "agg_quantiles_multi" not in head  # r9-verdicted, bucket 2

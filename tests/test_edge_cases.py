@@ -222,7 +222,7 @@ def test_empty_text_doc_tokenize_oracle_parity(spark, tmp_path):
 
 def test_rollup_cube_gsets_empty_input_semantics(spark, tmp_path):
     """VERDICT r5 item 5: pin the documented empty-input divergence in
-    code, not just in docs/PARITY_r05_empty_tier.txt. On an all-empty
+    code, not just in a parity transcript. On an all-empty
     table Spark's ROLLUP/CUBE/GROUPING SETS emit ZERO rows, where
     ANSI/DuckDB still emit the grand-total row (count 0, NULL sums).
     Both engines agree on any non-empty input (the 221-query parity

@@ -421,33 +421,44 @@ def test_rocksdb_state_store(spark, events_dir):
 
 def test_streaming_two_level_ewma_equals_batch(spark, sf_dir, events_dir):
     """Chained stateful aggregation (sub-window partials re-windowed)
-    produces the same finalized windows as the single-level stream and
-    the batch fold."""
+    produces the same finalized windows as the batch closed form, and
+    the same builder run on the batch table gives every window the
+    closed form gives, bit for bit equal to the stream where finalized."""
+    from kafka_stream_aggregator_spark.indicators import windowed_ewma_two_level
     from kafka_stream_aggregator_spark.streaming.pipeline import (
         streaming_windowed_ewma_two_level,
     )
+
+    def by_window(df):
+        return {
+            (r["event_type"], r["window_start"]): (r["n_rows"], r["ewma"])
+            for r in df.collect()
+        }
+
+    def rounded(d):
+        return {k: (n, round(e, 9)) for k, (n, e) in d.items()}
 
     stream = file_stream(spark, events_dir, EVENTS_SCHEMA)
     sdf = streaming_windowed_ewma_two_level(
         stream, group_cols=("event_type",), period_minutes=5
     )
-    got = {
-        (r["event_type"], r["window_start"]): (r["n_rows"], round(r["ewma"], 9))
-        for r in _run(spark, sdf, "s_ewma2l").collect()
-    }
+    got = by_window(_run(spark, sdf, "s_ewma2l"))
     ev = load_table(spark, sf_dir, "events")
-    batch = windowed_ewma(ev, group_cols=("event_type",), period_minutes=5)
+    closed = rounded(
+        by_window(windowed_ewma(ev, group_cols=("event_type",), period_minutes=5))
+    )
+    batch2l = by_window(
+        windowed_ewma_two_level(ev, group_cols=("event_type",), period_minutes=5)
+    )
+    assert rounded(batch2l) == closed
     max_ts = ev.agg(F.max(F.unix_timestamp("ts"))).first()[0]
     # chained stateful ops: the second aggregation's watermark trails the
     # first by one extra delay, so the finalized horizon is earlier
     horizon = max_ts - 2 * 600 - 300
-    want = {
-        (r["event_type"], r["window_start"]): (r["n_rows"], round(r["ewma"], 9))
-        for r in batch.collect()
-        if r["window_start"] + 300 <= horizon
-    }
     got_h = {k: v for k, v in got.items() if k[1] + 300 <= horizon}
-    assert got_h == want and len(want) > 800
+    want = {k: v for k, v in closed.items() if k[1] + 300 <= horizon}
+    assert rounded(got_h) == want and len(want) > 800
+    assert got_h == {k: batch2l[k] for k in got_h}
 
 
 def test_rollup_maintenance(spark, sf_dir, tmp_path):

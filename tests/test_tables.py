@@ -79,6 +79,26 @@ def test_table_path_is_the_file_load_table_reads(spark, tmp_path):
     assert load_table(spark, d, "documents").count() == 3
 
 
+def test_vanilla_session_shuffle_partitions_sized_from_the_host(
+    spark, monkeypatch
+):
+    """A driver-supplied session still at Spark's 200 shuffle partitions,
+    with $SPARK_GRAFT_CPUS unset, gets the thread count get_spark would
+    give local[n]: the CPUs this process may run on."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    s = spark.newSession()
+    s.conf.set(key, "200")
+    try:
+        load_table(s, SF_DIR, "region")
+        got = s.conf.get(key)
+    finally:
+        s.conf.unset(key)
+    assert got == str(len(os.sched_getaffinity(0)))
+    assert spark.conf.get(key) == before
+
+
 def test_live_testdata_schema_canary(spark):
     """Drift canary: every live table must load with no NTZ columns and
     events.ts must be TimestampType castable to double. Fails the moment

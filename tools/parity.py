@@ -107,7 +107,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(REGISTRY)
     # no console progress bar: its \r rewrites garble FAIL diagnostics
-    # in tee'd artifacts (VERDICT r7 item 6, docs/PARITY_r07_sf5_w1.txt)
+    # when the output is tee'd to a file (VERDICT r7 item 6)
     spark = get_spark(
         "parity",
         cpus=8,

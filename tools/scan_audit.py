@@ -70,7 +70,6 @@ def audit_query(spark, sf_dir, name, fn):
 
 def main():
     out_md = sys.argv[1] if len(sys.argv) > 1 else None
-    os.environ.setdefault("SPARK_GRAFT_NO_REORDER", "1")
     from kafka_stream_aggregator_spark.queries import REGISTRY
     from kafka_stream_aggregator_spark.session import get_spark
     from kafka_stream_aggregator_spark.tables import load_table
