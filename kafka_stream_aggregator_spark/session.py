@@ -12,11 +12,20 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Read by tables.load_table for events.parquet (TIMESTAMP(NANOS) column);
 # safe to set dynamically on any session.
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Hadoop's LocalFileSystem with an in-process chmod(2); built from
+# jvm/ForkFreeLocalFileSystem.java by tools/build_jvm.py.
+FORK_FREE_FS = "kafka_stream_aggregator_spark.jvm.ForkFreeLocalFileSystem"
+FORK_FREE_FS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "fork-free-local-fs.jar")
+LOCAL_FS = "org.apache.hadoop.fs.LocalFileSystem"
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 def env_flag(name: str) -> bool:
@@ -53,6 +62,22 @@ def local_resources(
     return n, mem
 
 
+def file_fs_impl() -> str:
+    """The class ``get_spark`` names for ``file:``: ``FORK_FREE_FS`` when
+    the JVM is still to be launched (it gets the jar) or already loads the
+    class, else Hadoop's plain ``LocalFileSystem``. A JVM that other code
+    launched (a session built before, or ``spark-submit``) never had the
+    jar put on its class path by ``get_spark``."""
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return FORK_FREE_FS
+    SparkContext._ensure_initialized()
+    try:
+        SparkContext._jvm.java.lang.Class.forName(FORK_FREE_FS)
+    except Py4JError:
+        return LOCAL_FS
+    return FORK_FREE_FS
+
+
 def get_spark(
     app_name: str = "kafka_stream_aggregator_spark",
     cpus: int | None = None,
@@ -65,16 +90,24 @@ def get_spark(
     CPUs this process may run on (``os.sched_getaffinity``); the driver
     memory to $SPARK_DRIVER_MEM, else half the host's physical RAM (see
     ``local_resources``). ``extra`` overrides any conf below, the driver
-    memory included.
+    memory included, except ``spark.driver.extraClassPath``: the engine's
+    jar is appended to the caller's class path, not replaced by it.
 
-    Streaming checkpoints commit by a plain rename on Hadoop's own
-    ``LocalFileSystem``, with no child process per file (the last two
-    confs; docs/SCALING.md, "Checkpoint I/O on a local filesystem").
+    Local files are created and checkpoints committed with no child
+    process per file (the last three confs; docs/SCALING.md, "Checkpoint
+    I/O on a local filesystem"): checkpoints commit by a plain rename,
+    and ``file:`` is ``ForkFreeLocalFileSystem``, Hadoop's
+    ``LocalFileSystem`` setting file modes with an in-process chmod(2).
+    When this call attaches to a JVM launched without the engine's jar,
+    ``file:`` stays Hadoop's plain ``LocalFileSystem`` (``file_fs_impl``).
+    When it attaches to a running context whose ``file:`` is neither,
+    checkpoints keep Spark's default manager.
 
     On a real cluster you would drop ``.master`` and let the submitter
-    decide, and drop those two checkpoint confs: on HDFS or an object
-    store Spark's default checkpoint manager is the one that fits. Every
-    other conf below still applies.
+    decide, and drop the jar and those three confs: on HDFS or an object
+    store Spark's default checkpoint manager is the one that fits, and
+    no file is created through ``file:``. Every other conf below still
+    applies.
     """
     n, driver_mem = local_resources(cpus)
     builder = (
@@ -116,22 +149,39 @@ def get_spark(
         # libhadoop every check is a forked `readlink` (94 per 4k-trade
         # JSON batch, 4 state partitions x delta + checksum files plus
         # the offset, commit and file-source logs). The FileSystem-based
-        # manager renames with rename(2). It needs Hadoop's own
-        # LocalFileSystem for file:, which the bundled hive-exec jar
-        # otherwise replaces (ServiceLoader) with ProxyLocalFileSystem,
-        # whose rename refuses an existing target: an overwriting commit
-        # would then keep the stale file. Both pins are tested in
-        # tests/test_checkpoint_io.py.
+        # manager renames with rename(2). It needs a LocalFileSystem for
+        # file:, which the bundled hive-exec jar otherwise replaces
+        # (ServiceLoader) with ProxyLocalFileSystem, whose rename refuses
+        # an existing target: an overwriting commit would then keep the
+        # stale file. Hadoop's own LocalFileSystem also forks `chmod` for
+        # every file and directory it creates (38 per batch, checkpoint
+        # files plus the parquet sink's); ForkFreeLocalFileSystem is the
+        # same filesystem with an in-process chmod(2). All of it is
+        # tested in tests/test_checkpoint_io.py.
         .config(
-            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_MANAGER_CONF,
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
-        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+        .config("spark.hadoop.fs.file.impl", file_fs_impl())
     )
-    if extra:
-        for k, v in extra.items():
-            builder = builder.config(k, v)
+    extra = dict(extra or {})
+    class_path = extra.pop("spark.driver.extraClassPath", None)
+    builder = builder.config(
+        "spark.driver.extraClassPath",
+        f"{class_path}{os.pathsep}{FORK_FREE_FS_JAR}" if class_path else FORK_FREE_FS_JAR,
+    )
+    for k, v in extra.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # A context that was already running keeps the file: filesystem it
+    # resolved, hive-exec's ProxyLocalFileSystem in a plain session: there
+    # checkpoints keep Spark's default manager, whose commits it gets right.
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    if fs.getClass().getName() not in (FORK_FREE_FS, LOCAL_FS):
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
     return spark

@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from kafka_stream_aggregator_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests")
     yield s
 
 

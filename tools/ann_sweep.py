@@ -29,7 +29,7 @@ from kafka_stream_aggregator_spark.tables import load_table
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("ann_sweep", cpus=8, shuffle_partitions=8)
+    spark = get_spark("ann_sweep")
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     ).cache()

@@ -87,10 +87,7 @@ def scan_spark(sf_dir: str) -> list[str]:
     """Run every registered Spark query; return '-0.0' hit lines."""
     from kafka_stream_aggregator_spark.session import get_spark
 
-    spark = get_spark(
-        "negzero_scan", cpus=8, shuffle_partitions=8,
-        extra={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark("negzero_scan", extra={"spark.ui.showConsoleProgress": "false"})
     bad = []
     for name, spec in REGISTRY.items():
         try:

@@ -75,12 +75,7 @@ def main():
     from kafka_stream_aggregator_spark.tables import load_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark(
-        "scan_audit",
-        cpus=8,
-        shuffle_partitions=8,
-        extra={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark("scan_audit", extra={"spark.ui.showConsoleProgress": "false"})
     for tname in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"

@@ -56,7 +56,7 @@ def main():
     names = sys.argv[2:] or [
         n for n in REGISTRY if not n.startswith("stream_")
     ]
-    spark = get_spark("window_audit", cpus=8, shuffle_partitions=8)
+    spark = get_spark("window_audit")
     n_bad = 0
     for name in names:
         try:
