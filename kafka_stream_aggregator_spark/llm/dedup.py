@@ -5,9 +5,12 @@ extra literal columns) — no python in the hot path, every stage is a
 keyed shuffle, so the same code runs at 100 TB:
 
   exact:   hash-groupBy, one shuffle on the content hash
-  minhash: shingle-explode -> 1 shuffle (groupBy doc) for signatures ->
-           band-explode -> 1 shuffle (groupBy band bucket) -> pair join
-           restricted to same-bucket docs (never all-pairs)
+  minhash: one row per doc (token array -> distinct shingle-hash set ->
+           signature fold, no explode or aggregate) -> band-explode ->
+           1 shuffle (groupBy band bucket) -> pairs only within a bucket
+           (never all-pairs) -> exact-Jaccard verification. The doc row
+           and the band buckets are SQL text (minhash_doc_sql,
+           band_buckets_sql) that streaming.neardup runs on a stream.
   simhash: token-explode -> bitwise majority agg -> 16-bit band blocking
 """
 
@@ -22,7 +25,9 @@ from ..ops import data_sized_partitions
 
 
 def _shingles(text_col, shingle_len: int):
-    """Distinct word n-gram shingles of lower-cased text."""
+    """Distinct word n-gram shingles of lower-cased text, as Column
+    expressions: minhash_signatures' own construction, kept apart from
+    minhash_doc_sql so that it stays an independent reference."""
     toks = F.split(F.lower(F.trim(text_col)), r"\s+")
     n = F.size(toks)
     return F.when(n >= shingle_len, F.array_distinct(
@@ -124,6 +129,61 @@ def choose_bands(
     return best
 
 
+def minhash_doc_sql(
+    src: str,
+    id_col: str,
+    text_col: str,
+    n_hashes: int = 32,
+    shingle_len: int = 3,
+) -> str:
+    """SQL for the per-doc MinHash row over the relation ``src``:
+    (__id, __n_sh, __set, __sig) — distinct shingle count, the distinct
+    shingle-hash array and the k-min-hash signature as one array<bigint>.
+    minhash_doc_table runs it on a batch and streaming.neardup on a
+    stream; the signature equals minhash_signatures' (tested).
+
+    Each shingle string is hashed once and the k min-hash functions
+    re-hash that long with the INT seed k, as minhash_signatures does.
+    The shape keeps interpreted lambdas from re-running the tokenizer:
+    the token array is its own projection (referenced several times,
+    so Catalyst does not inline ``split`` into the shingle lambda), and
+    the signature is ONE aggregate/zip_with fold updating all k mins
+    per shingle — k separate ``array_min(transform(__set, ...))``
+    columns get the whole shingle set inlined into each lambda once
+    ``__set`` is referenced only once (5,000 docs: 2.0–2.6 s vs
+    0.32–0.49 s for the fold, plans pinned in tests/test_plans.py)."""
+    return f"""
+    SELECT __id, size(__set) AS __n_sh, __set,
+           aggregate(__set, array_repeat(9223372036854775807L, {n_hashes}),
+             (acc, x) -> zip_with(acc, sequence(0, {n_hashes - 1}),
+                                  (m, k) -> least(m, xxhash64(x, k)))) AS __sig
+    FROM (
+      SELECT __id, transform(
+               CASE WHEN size(__toks) >= {shingle_len}
+                    THEN array_distinct(transform(
+                           sequence(1, size(__toks) - {shingle_len} + 1),
+                           i -> array_join(slice(__toks, i, {shingle_len}), ' ')))
+                    ELSE array(array_join(__toks, ' ')) END,
+               s -> xxhash64(s)) AS __set
+      FROM (
+        SELECT `{id_col}` AS __id,
+               split(lower(trim(`{text_col}`)), '\\\\s+') AS __toks
+        FROM {src}))
+    """
+
+
+def band_buckets_sql(sig: str, n_hashes: int, bands: int) -> str:
+    """SQL array of (band, bucket) structs for the signature column
+    ``sig``: band b's bucket is the xxhash64 of its ``n_hashes // bands``
+    min-hashes joined as text. Shared by the batch and stream LSH."""
+    rows = n_hashes // bands
+    return (
+        f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
+        f"xxhash64(array_join(transform(slice({sig}, b * {rows} + 1, {rows}), "
+        f"x -> CAST(x AS STRING)), ',')) AS bucket))"
+    )
+
+
 def minhash_doc_table(
     df: DataFrame,
     id_col: str,
@@ -131,44 +191,18 @@ def minhash_doc_table(
     n_hashes: int = 32,
     shingle_len: int = 3,
 ) -> DataFrame:
-    """One row per doc: (__id, __n_sh, __set, h0..h{k-1}) — distinct
-    shingle count, the shingle-hash array, and the k min-hashes — built
-    entirely with array expressions on the un-exploded shingle array
-    (no explode, no aggregate, ZERO shuffle beyond the CPU-spreading
-    repartition; the plan-shape pin lives in tests/test_plans.py).
-    The __set array is materialized ONCE in its own projection and the
-    k array_min(transform(...)) expressions reference it — Catalyst
-    does not inline a multiply-referenced non-trivial alias, so the
-    shingling never re-runs per seed (warm-verified 0.25 s vs the 6.2 s
-    k-fold inlining trap documented in streaming/neardup.py)."""
-    spark = df.sparkSession
+    """minhash_doc_sql over ``df`` spread across the cluster: one row
+    per doc, array expressions only (no explode, no aggregate — the
+    only shuffle is the repartition; plan pinned in tests/test_plans.py).
+
+    floor=16: the repartition feeds the CPU-heavy interpreted shingle
+    transform, where extra width pays even when the input is tiny by
+    bytes (measured at sf0.1: 0.42 s at 16 tasks vs 0.54 s at 8, vs
+    1.06 s at 32 — task-launch overhead wins past that)."""
     rep = df.repartition(data_sized_partitions(df, floor=16), id_col)
-    mins = ",\n       ".join(
-        f"array_min(transform(__set, h -> xxhash64(h, {k}))) AS h{k}"
-        for k in range(n_hashes)
+    return df.sparkSession.sql(
+        minhash_doc_sql("{df}", id_col, text_col, n_hashes, shingle_len), df=rep
     )
-    docs_sql = f"""
-    WITH toksrc AS (
-      SELECT `{id_col}` AS __id,
-             split(lower(trim(`{text_col}`)), '\\\\s+') AS toks
-      FROM {{df}}
-    ), shingled AS (
-      SELECT __id,
-        CASE WHEN size(toks) >= {shingle_len}
-             THEN array_distinct(transform(
-                    sequence(1, size(toks) - {shingle_len} + 1),
-                    i -> array_join(slice(toks, i, {shingle_len}), ' ')))
-             ELSE array(array_join(toks, ' ')) END AS sh_str
-      FROM toksrc
-    ), hashed AS (
-      SELECT __id, transform(sh_str, s -> xxhash64(s)) AS __set
-      FROM shingled
-    )
-    SELECT __id, size(__set) AS __n_sh, __set,
-           {mins}
-    FROM hashed
-    """
-    return spark.sql(docs_sql, df=rep)
 
 
 def minhash_near_dup(
@@ -204,30 +238,8 @@ def minhash_near_dup(
     """
     if bands is None:
         bands = choose_bands(n_hashes, jaccard_threshold)
-    rows = n_hashes // bands
-    # Tokenize/shingle the corpus exactly ONCE, straight to ONE row per
-    # doc carrying everything downstream needs: shingle count, the
-    # shingle-hash SET (for exact-Jaccard verification), and the k
-    # min-hashes. Round-13 (guide §2.4/§1): the per-doc row is computed
-    # ENTIRELY with array expressions on the un-exploded shingle array
-    # (transform + array_min per seed) — the previous shape exploded the
-    # shingles and re-grouped them with a 34-function aggregate
-    # (count + collect_list + 32 mins). The groupBy already reused the
-    # repartition's hashpartitioning(__id), so the shuffle count is
-    # unchanged (1); what the rewrite deletes is (a) the Generate +
-    # re-group row machinery over every exploded shingle row,
-    # (b) ObjectHashAggregate itself (collect_list is typed-imperative:
-    # sort-based fallback past 128 groups/partition re-sorts the
-    # exploded rows at any real per-partition doc count), and (c) ~3.3 s
-    # of whole-stage-codegen + JIT on first execution in every fresh JVM
-    # (measured: cold 4.2 s agg vs 0.9 s HOF; warm 0.274 s vs 0.251 s;
-    # values bit-identical — same xxhash64 calls in both shapes). The
-    # docs phase now has no aggregate at all. Per-row state stays O(doc
-    # shingles), the same bound the collect_list buffer had.
-    # (The r12-VERDICT candidate — explode (shingle x 32 seeds) with
-    # two-level partial min — was measured WORSE: 1.07 s warm vs 0.27 s
-    # for the signature part alone; it adds a 32x-row explode and a
-    # second Exchange. Rejected.)
+    # The corpus is tokenized exactly once, straight to one row per doc
+    # carrying everything downstream needs (minhash_doc_table).
     # localCheckpoint instead of .cache(): checkpoint blocks are
     # released by the ContextCleaner as soon as this DataFrame is
     # garbage-collected (a CacheManager entry is pinned until an
@@ -238,15 +250,9 @@ def minhash_near_dup(
     # spark.memory.storageFraction — at 100 TB the table degrades to
     # the disk path instead of competing with the join stages' working
     # set. Pass StorageLevel.DISK_ONLY to skip the memory tier.
-    # All three phases are built as SQL strings (one JVM parse each)
-    # instead of Column-object compositions: the ~100 py4j round trips
-    # of the expression builders cost a measured ~0.35 s of plan
-    # CONSTRUCTION per call at any data size. The plans are identical
-    # (verified value-equal against the Column-built originals).
-    # floor=16: this repartition feeds the CPU-heavy interpreted
-    # shingle transform, where extra width pays even when the input is
-    # tiny by bytes (measured at sf0.1: 0.42 s at 16 tasks vs 0.54 s at
-    # 8, vs 1.06 s at 32 — task-launch overhead wins past that).
+    # The doc and bucket phases are SQL strings (one JVM parse each):
+    # the ~100 py4j round trips of the equivalent Column builders cost
+    # ~0.35 s of plan construction per call at any data size.
     spark = df.sparkSession
     docs = minhash_doc_table(
         df, id_col, text_col, n_hashes, shingle_len
@@ -258,29 +264,18 @@ def minhash_near_dup(
     # candidate generation: band-explode off the checkpointed per-doc
     # table, then ONE shuffle on (band, bucket) into a member-list row
     # per bucket (map-side partial collect_list), then pairs stream out
-    # of a double explode — no self-join, no window. (Previous shape:
-    # bucket-stats window + SMJ self-join on the same exchange — one
-    # more stage and a sort either side; measured ~0.2s slower at sf0.1
-    # for identical output.) The left explode source is the whole
-    # member list below the cap (all ordered pairs) and just the min-id
-    # member above it (star topology) — one expression gives both
-    # topologies, and id_a < id_b holds for both since the star
-    # representative IS the bucket minimum. Reducer-side exposure for a
-    # degenerate bucket is one member list (O(bucket) ids), same row
-    # concentration the window had on a single (band,bucket) partition.
-    sig_arr = ",".join(f"h{k}" for k in range(n_hashes))
+    # of a double explode — no self-join, no window. The left explode
+    # source is the whole member list below the cap (all ordered pairs)
+    # and just the min-id member above it (star topology) — one
+    # expression gives both topologies, and id_a < id_b holds for both
+    # since the star representative IS the bucket minimum. Reducer-side
+    # exposure for a degenerate bucket is one member list (O(bucket) ids).
     buckets_sql = f"""
-    WITH banded AS (
-      SELECT __id, bb.band AS band, bb.bucket AS bucket FROM (
-        SELECT __id, explode(transform(sequence(0, {bands - 1}),
-          b -> struct(b AS band,
-                      xxhash64(array_join(transform(
-                        slice(array({sig_arr}), b * {rows} + 1, {rows}),
-                        x -> CAST(x AS STRING)), ',')) AS bucket))) AS bb
-        FROM {{docs}})
-    )
-    SELECT band, bucket, collect_list(__id) AS __ids, count(*) AS __bn
-    FROM banded GROUP BY band, bucket
+    SELECT bb.band AS band, bb.bucket AS bucket,
+           collect_list(__id) AS __ids, count(*) AS __bn
+    FROM (SELECT __id, explode({band_buckets_sql("__sig", n_hashes, bands)}) AS bb
+          FROM {{docs}})
+    GROUP BY bb.band, bb.bucket
     """
     buckets = spark.sql(buckets_sql, docs=docs)
     if skew_observation is not None:

@@ -262,6 +262,44 @@ def distributed_global_rank(
     return out.drop("__pb", "__off", *[f"__soff_{c}" for c in sums])
 
 
+def _holds_rank(r, count):
+    """A row whose ``count`` values take ranks from ``__below`` on
+    holds rank ``r``."""
+    return (F.col("__below") <= r) & (r < F.col("__below") + count)
+
+
+def _interpolate_boundaries(
+    ranked: DataFrame,
+    group_cols: Sequence[str],
+    qs: Sequence[tuple[float, str]],
+    count,
+) -> DataFrame:
+    """The quantile_cont tail of every exact tier. ``ranked`` carries
+    ``__v``, the group's row count ``__n`` and ``__below``: each row
+    stands for ``count`` equal values ranked from ``__below`` on. Only
+    rows holding the floor or ceil rank of a target survive into one
+    small agg, and each quantile interpolates between those two values."""
+    keep = F.lit(False)
+    aggs = [F.max("__n").alias("__n_g")]
+    for i, (q, _) in enumerate(qs):
+        pos = F.lit(float(q)) * (F.col("__n") - 1)
+        lo, hi = _holds_rank(F.floor(pos), count), _holds_rank(F.ceil(pos), count)
+        keep = keep | lo | hi
+        aggs.append(F.max(F.when(lo, F.col("__v"))).alias(f"__lo{i}"))
+        aggs.append(F.max(F.when(hi, F.col("__v"))).alias(f"__hi{i}"))
+    agged = ranked.filter(keep).groupBy(*group_cols).agg(*aggs)
+    outs = list(group_cols)
+    for i, (q, name) in enumerate(qs):
+        pos = F.lit(float(q)) * (F.col("__n_g") - 1)
+        frac = pos - F.floor(pos)
+        outs.append(
+            (F.col(f"__lo{i}") + frac * (F.col(f"__hi{i}") - F.col(f"__lo{i}"))).alias(
+                name
+            )
+        )
+    return agged.select(*outs)
+
+
 def exact_percentiles(
     df: DataFrame,
     value_col: str,
@@ -292,34 +330,10 @@ def exact_percentiles(
     ranked = df.filter(v.isNotNull()).select(
         *group_cols,
         v.alias("__v"),
-        (F.row_number().over(w_rank) - 1).alias("__rn"),
+        (F.row_number().over(w_rank) - 1).alias("__below"),
         F.count(F.lit(1)).over(w_all).alias("__n"),
     )
-    keep = F.lit(False)
-    for q, _ in qs:
-        pos = F.lit(float(q)) * (F.col("__n") - 1)
-        keep = keep | (F.col("__rn") == F.floor(pos)) | (F.col("__rn") == F.ceil(pos))
-    boundary = ranked.filter(keep)
-    aggs = [F.max("__n").alias("__n_g")]
-    for i, (q, _) in enumerate(qs):
-        pos = F.lit(float(q)) * (F.col("__n") - 1)
-        aggs.append(
-            F.max(F.when(F.col("__rn") == F.floor(pos), F.col("__v"))).alias(f"__lo{i}")
-        )
-        aggs.append(
-            F.max(F.when(F.col("__rn") == F.ceil(pos), F.col("__v"))).alias(f"__hi{i}")
-        )
-    agged = boundary.groupBy(*group_cols).agg(*aggs)
-    outs = list(group_cols)
-    for i, (q, name) in enumerate(qs):
-        pos = F.lit(float(q)) * (F.col("__n_g") - 1)
-        frac = pos - F.floor(pos)
-        outs.append(
-            (F.col(f"__lo{i}") + frac * (F.col(f"__hi{i}") - F.col(f"__lo{i}"))).alias(
-                name
-            )
-        )
-    return agged.select(*outs)
+    return _interpolate_boundaries(ranked, group_cols, qs, F.lit(1))
 
 
 def exact_percentiles_bucketed(
@@ -328,7 +342,6 @@ def exact_percentiles_bucketed(
     qs: Sequence[tuple[float, str]],
     group_cols: Sequence[str] = (),
     n_buckets: int = 8192,
-    static_step: float | None = None,
 ) -> DataFrame:
     """Exact percentiles without a per-group sort: histogram bucketing
     locates each target rank's bucket, and only the rows of those
@@ -341,78 +354,48 @@ def exact_percentiles_bucketed(
     (group, bucket): thousands of tiny partitions, embarrassingly
     parallel. Same quantile_cont interpolation, exact at any value
     cardinality; the scale-preferred exact tier (docs/SCALING.md).
-
-    ``static_step``: when the caller knows the value column's scale (a
-    monetary column, a bounded score), pass a fixed bucket width and
-    the min/max stats pass — one full scan plus a stage barrier — is
-    skipped entirely: bucket = floor(v / step), group counts come from
-    the bucket-count window. Two scans instead of three; the step
-    affects only how many rows the refinement ranks (aim for
-    ~n/4096 per bucket), never the result. This is the plan shape the
-    fused agg_percentiles bench query uses.
     """
     g = list(group_cols)
     v = F.col(value_col).cast("double")
     df0 = df.select(*g, v.alias("__v")).filter(F.col("__v").isNotNull())
     w = (W.partitionBy(*g) if g else W.partitionBy(F.lit(1))).orderBy("__b")
-    w_all = W.partitionBy(*g) if g else W.partitionBy(F.lit(1))
 
-    if static_step is not None:
-        # caller-known scale: no stats pass, fixed-width buckets
-        withb = df0.withColumn(
-            "__b", F.floor(F.col("__v") / F.lit(float(static_step))).cast("long")
-        )
-        bcounts = withb.groupBy(*g, "__b").agg(F.count(F.lit(1)).alias("__bn"))
-        cum = bcounts.select(
-            *g,
-            "__b",
-            "__bn",
-            (
-                F.sum("__bn").over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-                - F.col("__bn")
-            ).alias("__below"),
-            F.sum("__bn").over(w_all).alias("__n"),
-        )
-    else:
-        # pass 1: per-group range + count (drives bucket width and ranks)
-        stats = df0.groupBy(*g).agg(
-            F.min("__v").alias("__lo"),
-            F.max("__v").alias("__hi"),
-            F.count(F.lit(1)).alias("__n"),
-        )
+    # pass 1: per-group range + count (drives bucket width and ranks)
+    stats = df0.groupBy(*g).agg(
+        F.min("__v").alias("__lo"),
+        F.max("__v").alias("__hi"),
+        F.count(F.lit(1)).alias("__n"),
+    )
 
-        def bucket_of(val):
-            span = F.col("__hi") - F.col("__lo")
-            raw = F.floor((val - F.col("__lo")) / span * n_buckets)
-            return F.when(span == 0.0, F.lit(0)).otherwise(
-                F.least(raw, F.lit(n_buckets - 1))
-            ).cast("long")
+    def bucket_of(val):
+        span = F.col("__hi") - F.col("__lo")
+        raw = F.floor((val - F.col("__lo")) / span * n_buckets)
+        return F.when(span == 0.0, F.lit(0)).otherwise(
+            F.least(raw, F.lit(n_buckets - 1))
+        ).cast("long")
 
-        withb = df0.join(F.broadcast(stats), g) if g else df0.crossJoin(
-            F.broadcast(stats)
-        )
-        withb = withb.withColumn("__b", bucket_of(F.col("__v")))
+    withb = df0.join(F.broadcast(stats), g) if g else df0.crossJoin(
+        F.broadcast(stats)
+    )
+    withb = withb.withColumn("__b", bucket_of(F.col("__v")))
 
-        # pass 2: per-(group, bucket) counts -> cumulative rows below bucket
-        bcounts = withb.groupBy(*g, "__b").agg(F.count(F.lit(1)).alias("__bn"))
-        cum = bcounts.withColumn(
-            "__below",
-            F.sum("__bn").over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-            - F.col("__bn"),
-        )
-        # a bucket is hot if it contains floor/ceil of any target rank
-        cum = cum.join(F.broadcast(stats.select(*g, "__n")), g) if g else (
-            cum.crossJoin(F.broadcast(stats.select("__n")))
-        )
+    # pass 2: per-(group, bucket) counts -> cumulative rows below bucket
+    bcounts = withb.groupBy(*g, "__b").agg(F.count(F.lit(1)).alias("__bn"))
+    cum = bcounts.withColumn(
+        "__below",
+        F.sum("__bn").over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+        - F.col("__bn"),
+    )
+    # a bucket is hot if it contains floor/ceil of any target rank
+    cum = cum.join(F.broadcast(stats.select(*g, "__n")), g) if g else (
+        cum.crossJoin(F.broadcast(stats.select("__n")))
+    )
     hot_pred = F.lit(False)
     for q, _ in qs:
         pos = F.lit(float(q)) * (F.col("__n") - 1)
         for r in (F.floor(pos), F.ceil(pos)):
-            hot_pred = hot_pred | (
-                (F.col("__below") <= r) & (r < F.col("__below") + F.col("__bn"))
-            )
-    hot_cols = [*g, "__b", "__below"] + (["__n"] if static_step is not None else [])
-    hot_buckets = cum.filter(hot_pred).select(*hot_cols)
+            hot_pred = hot_pred | _holds_rank(r, F.col("__bn"))
+    hot_buckets = cum.filter(hot_pred).select(*g, "__b", "__below")
 
     # pass 3: rank ONLY the hot buckets' rows (tiny, parallel
     # partitions); __n already rides along from the stats join above
@@ -421,29 +404,9 @@ def exact_percentiles_bucketed(
         W.partitionBy(*g, "__b") if g else W.partitionBy("__b")
     ).orderBy("__v")
     ranked = hot.withColumn(
-        "__rn", F.col("__below") + F.row_number().over(w_local) - 1
+        "__below", F.col("__below") + F.row_number().over(w_local) - 1
     )
-
-    aggs = [F.max("__n").alias("__n_g")]
-    for i, (q, _) in enumerate(qs):
-        pos = F.lit(float(q)) * (F.col("__n") - 1)
-        aggs.append(
-            F.max(F.when(F.col("__rn") == F.floor(pos), F.col("__v"))).alias(f"__lo{i}")
-        )
-        aggs.append(
-            F.max(F.when(F.col("__rn") == F.ceil(pos), F.col("__v"))).alias(f"__hi{i}")
-        )
-    agged = ranked.groupBy(*g).agg(*aggs)
-    outs = list(g)
-    for i, (q, name) in enumerate(qs):
-        pos = F.lit(float(q)) * (F.col("__n_g") - 1)
-        frac = pos - F.floor(pos)
-        outs.append(
-            (F.col(f"__lo{i}") + frac * (F.col(f"__hi{i}") - F.col(f"__lo{i}"))).alias(
-                name
-            )
-        )
-    return agged.select(*outs)
+    return _interpolate_boundaries(ranked, g, qs, F.lit(1))
 
 
 def exact_percentiles_counts(
@@ -487,29 +450,7 @@ def exact_percentiles_counts(
         ).alias("__below"),
         F.sum("__c").over(w_all).alias("__n"),
     )
-    aggs = [F.max("__n").alias("__n_g")]
-    for i, (q, _) in enumerate(qs):
-        pos = F.lit(float(q)) * (F.col("__n") - 1)
-        in_row = lambda r: (F.col("__below") <= r) & (
-            r < F.col("__below") + F.col("__c")
-        )
-        aggs.append(
-            F.max(F.when(in_row(F.floor(pos)), F.col("__v"))).alias(f"__lo{i}")
-        )
-        aggs.append(
-            F.max(F.when(in_row(F.ceil(pos)), F.col("__v"))).alias(f"__hi{i}")
-        )
-    agged = cum.groupBy(*g).agg(*aggs)
-    outs = list(g)
-    for i, (q, name) in enumerate(qs):
-        pos = F.lit(float(q)) * (F.col("__n_g") - 1)
-        frac = pos - F.floor(pos)
-        outs.append(
-            (F.col(f"__lo{i}") + frac * (F.col(f"__hi{i}") - F.col(f"__lo{i}"))).alias(
-                name
-            )
-        )
-    return agged.select(*outs)
+    return _interpolate_boundaries(cum, g, qs, F.col("__c"))
 
 
 SORT_TIER_MAX_ROWS = 10_000_000  # measured crossover (docs/SCALING.md)

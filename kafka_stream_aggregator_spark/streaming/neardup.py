@@ -7,9 +7,9 @@ state store, partitioned by (band, bucket).
 
 Design for scale:
 
-* Signatures are computed PER ROW with column expressions (shingle
-  array -> hashed array -> k array_min's) — identical hash
-  construction to the batch operator (pinned by test), but with no
+* Signatures and band buckets come PER ROW from the batch operator's
+  own SQL text (``llm.dedup.minhash_doc_sql``, ``band_buckets_sql``),
+  so batch and stream buckets are the same by construction, with no
   groupBy: a streaming aggregation feeding the stateful op would be a
   chained-stateful topology with append-mode caveats; row-wise needs
   none of that.
@@ -33,69 +33,14 @@ Design for scale:
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..llm.dedup import _shingles
-
-
-def rowwise_signature(
-    text_col, n_hashes: int = 32, shingle_len: int = 3
-) -> F.Column:
-    """Per-row MinHash signature as a pure column expression — the same
-    (xxhash64 shingle -> seeded re-hash -> min) construction as
-    llm.dedup.minhash_signatures, so batch and stream signatures are
-    bit-identical (tested).
-
-    Shape matters: ONE aggregate() fold over the shingle array updating
-    all k mins per element (zip_with + least), not k separate
-    array_min(transform(...)) columns — the latter inlines the shingle
-    construction (split/slice/array_join per shingle) into every one of
-    the k expressions and interpreted evaluation re-runs it k times per
-    row: measured 6.2 s vs 0.3 s for 250 docs at k=32. The seed rides
-    as an INT literal position (xxhash64(x, k) with k from
-    sequence(0, k-1)) exactly like the batch operator's F.lit(k)."""
-    sh = F.transform(
-        _shingles(text_col, shingle_len), lambda s: F.xxhash64(s)
-    )
-    init = F.expr(
-        f"transform(sequence(0, {n_hashes - 1}), k -> 9223372036854775807L)"
-    )
-    seq = F.expr(f"sequence(0, {n_hashes - 1})")
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, x: F.zip_with(
-            acc, seq, lambda a, k: F.least(a, F.xxhash64(x, k))
-        ),
-    )
-
-
-def band_buckets(sig_col, n_hashes: int, bands: int) -> F.Column:
-    """Array of (band, bucket) structs — identical bucket hash to the
-    batch operator's banding."""
-    rows = n_hashes // bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.xxhash64(
-                F.array_join(
-                    F.transform(
-                        F.slice(sig_col, b * rows + 1, rows),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                )
-            ).alias("bucket"),
-        ),
-    )
-
+from ..llm.dedup import band_buckets_sql, minhash_doc_sql
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -255,18 +200,15 @@ def streaming_near_dup(
     (every distinct band hash ever seen otherwise lives forever). The
     timeout clock RESETS whenever the bucket receives a doc, so hot
     buckets (boilerplate) stay resident while one-off buckets age out."""
-    sig = rowwise_signature(F.col(text_col), n_hashes, shingle_len)
-    banded = stream.select(
-        F.col(id_col).alias("__id"), sig.alias("__sig")
-    ).select(
-        "__id",
-        "__sig",
-        F.explode(band_buckets(F.col("__sig"), n_hashes, bands)).alias("bb"),
-    ).select(
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-        "__id",
-        "__sig",
+    doc_sql = minhash_doc_sql("{stream}", id_col, text_col, n_hashes, shingle_len)
+    banded = stream.sparkSession.sql(
+        f"""
+        SELECT bb.band AS band, bb.bucket AS bucket, __id, __sig
+        FROM (SELECT __id, __sig,
+                     explode({band_buckets_sql("__sig", n_hashes, bands)}) AS bb
+              FROM ({doc_sql}))
+        """,
+        stream=stream,
     )
 
     def update(
@@ -311,98 +253,4 @@ def streaming_near_dup(
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=timeout,
-    )
-
-
-def streaming_near_dup_tws(
-    stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_len: int = 3,
-    jaccard_threshold: float = 0.5,
-    max_bucket_size: int = 256,
-    state_ttl_ms: int | None = None,
-    max_pairs_per_batch: int | None = 10_000,
-) -> DataFrame:
-    """`streaming_near_dup` on the Spark 4.x state-v2 API
-    (transformWithStateInPandas) with a typed MapState index:
-    doc_id -> signature per (band, bucket) key.
-
-    Why MapState beats the v1 packed-arrays state here: members are
-    individually addressable (insert is one map put, not
-    read-modify-write of the whole bucket blob), the per-entry layout
-    is what RocksDB stores natively, and state-v2's built-in TTL
-    (``ttlDurationMs``) ages out PER ENTRY — finer than the v1
-    variant's whole-bucket processing-time timeout, so a hot bucket's
-    old members still expire individually while the bucket stays live.
-
-    Same pair semantics as the v1 operator (same signatures, banding,
-    in-batch comparison, size cap). It REQUIRES the RocksDB state store provider and google.protobuf in
-    the Python worker (plan construction works without; execution is
-    integration-gated in tests)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    sig = rowwise_signature(F.col(text_col), n_hashes, shingle_len)
-    banded = stream.select(
-        F.col(id_col).alias("__id"), sig.alias("__sig")
-    ).select(
-        "__id",
-        "__sig",
-        F.explode(band_buckets(F.col("__sig"), n_hashes, bands)).alias("bb"),
-    ).select(
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-        "__id",
-        "__sig",
-    )
-
-    class _NearDupProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._members = handle.getMapState(
-                "members",
-                "doc_id long",
-                "sigs array<bigint>",
-                ttlDurationMs=state_ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            band = int(key[0])
-            ids: list[int] = []
-            sigs: list[int] = []
-            if self._members.exists():
-                members = sorted(  # map iteration order not contractual
-                    (int(mk), list(mv))
-                    for (mk,), (mv,) in self._members.iterator()
-                )
-                for mk, mv in members:
-                    ids.append(mk)
-                    sigs.extend(mv)
-            n_before = len(ids)
-            batch = pd.concat(list(rows), ignore_index=True)
-            out = _bucket_pairs(
-                ids, sigs, batch, band, n_hashes, jaccard_threshold,
-                max_bucket_size,
-                max_pairs_per_batch
-                if max_pairs_per_batch is not None
-                else (1 << 62),
-            )
-            for p in range(n_before, len(ids)):
-                self._members.updateValue(
-                    (ids[p],), (sigs[p * n_hashes:(p + 1) * n_hashes],)
-                )
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-
-        def close(self) -> None:
-            pass
-
-    return banded.groupBy("band", "bucket").transformWithStateInPandas(
-        statefulProcessor=_NearDupProcessor(),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
     )

@@ -393,7 +393,7 @@ def test_shj_build_side_guard(spark, sf_dir):
 
 def test_minhash_doc_table_no_aggregate_no_explode(spark, sf_dir):
     """Round-13 optimization pin: the per-doc MinHash table (shingle
-    set + 32 mins) is pure array expressions on the un-exploded shingle
+    set + signature) is pure array expressions on the un-exploded shingle
     array — no Generate (explode), no aggregate of any kind, and the
     only Exchange is the CPU-spreading repartition. The old shape
     (explode -> 34-function ObjectHashAggregate) re-sorted exploded
@@ -409,29 +409,51 @@ def test_minhash_doc_table_no_aggregate_no_explode(spark, sf_dir):
     assert "Aggregate" not in plan  # no Hash/Object/Sort aggregate
 
 
-def test_minhash_doc_table_matches_signatures(spark, sf_dir):
-    """The HOF-built h0..h31 equal minhash_signatures' aggregate-built
-    signature bit-for-bit (same xxhash64 calls, different plan shape)."""
-    from pyspark.sql import functions as F
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` span of a plan string, brackets
+    matched (nested lambdas appear both inside their parent and alone)."""
+    spans = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        spans.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return spans
 
-    from kafka_stream_aggregator_spark.llm.dedup import (
-        minhash_doc_table,
-        minhash_signatures,
-    )
-    from kafka_stream_aggregator_spark.tables import load_table
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 200)
+def test_minhash_doc_row_tokenizes_outside_lambdas(spark, sf_dir, tmp_path):
+    """The per-doc MinHash row runs ``split`` once per doc in its own
+    projection, on a batch (minhash_doc_table) and on a file stream
+    (streaming_near_dup). If Catalyst inlined the token array into the
+    shingle lambda, interpreted evaluation would re-tokenize the whole
+    text once per shingle (measured 2-3x slower on 5,000 docs)."""
+    from kafka_stream_aggregator_spark.llm.dedup import minhash_doc_table
+    from kafka_stream_aggregator_spark.streaming.neardup import (
+        streaming_near_dup,
     )
-    hof = minhash_doc_table(d, "doc_id", "text").select(
-        F.col("__id").alias("doc_id"),
-        F.array(*[f"h{k}" for k in range(32)]).alias("signature"),
-    )
-    agg = minhash_signatures(d, "doc_id", "text")
-    assert hof.exceptAll(agg).count() == 0
-    assert agg.exceptAll(hof).count() == 0
+    from kafka_stream_aggregator_spark.streaming.sources import file_stream
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    src = str(tmp_path / "docs")
+    d.limit(50).write.parquet(src)
+    stream = file_stream(spark, src, "doc_id long, text string")
+    plans = {
+        "batch": minhash_doc_table(d, "doc_id", "text")
+        ._jdf.queryExecution().optimizedPlan().toString(),
+        # a streaming plan is only reachable through explain
+        "stream": spark._jvm.PythonSQLUtils.explainString(
+            streaming_near_dup(stream)._jdf.queryExecution(), "extended"
+        ).split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0],
+    }
+    for kind, plan in plans.items():
+        assert plan.count("split(") == 1, (kind, plan)
+        bodies = _lambda_bodies(plan)
+        assert bodies, (kind, plan)  # the shingle and signature lambdas
+        assert not [b for b in bodies if "split(" in b], (kind, plan)
 
 
 def test_win_cumulative_ewma_twin_matches_helper(spark, sf_dir):

@@ -350,12 +350,6 @@ def test_percentile_tiers_agree(spark, groups, qs):
         "bucketed": exact_percentiles_bucketed(
             df, "v", spec, group_cols=("g",), n_buckets=16
         ),
-        # caller-known-scale variant: fixed bucket width, no stats pass
-        # (negative values land in negative buckets — floor keeps the
-        # bucket order monotone in v)
-        "bucketed_static": exact_percentiles_bucketed(
-            df, "v", spec, group_cols=("g",), static_step=7.3
-        ),
     }
     expect = {}
     by_g: dict = {}

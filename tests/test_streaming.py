@@ -679,26 +679,40 @@ def test_streaming_dedup_within_watermark(spark, events_dir):
     assert n == batch_n
 
 
-def test_rowwise_signature_equals_batch(spark, sf_dir):
-    """The streaming per-row signature must be bit-identical to the
-    batch minhash_signatures construction."""
-    from kafka_stream_aggregator_spark.llm.dedup import minhash_signatures
-    from kafka_stream_aggregator_spark.streaming.neardup import (
-        rowwise_signature,
+def test_minhash_signature_equals_reference_batch_and_stream(
+    spark, sf_dir, tmp_path
+):
+    """The shared per-doc signature (llm.dedup.minhash_doc_sql) equals
+    the explode + groupBy reference minhash_signatures bit for bit, run
+    as the batch doc table and on a file stream."""
+    from kafka_stream_aggregator_spark.llm.dedup import (
+        minhash_doc_sql,
+        minhash_doc_table,
+        minhash_signatures,
     )
 
-    docs = load_table(spark, sf_dir, "documents").limit(100)
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 200)
+    )
+    want = minhash_signatures(docs, "doc_id", "text")
+    d = str(tmp_path / "sig_stream")
+    docs.write.parquet(d)
+    stream = file_stream(spark, d, "doc_id long, text string")
     got = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in docs.select(
-            "doc_id", rowwise_signature(F.col("text")).alias("sig")
-        ).collect()
+        "batch": minhash_doc_table(docs, "doc_id", "text"),
+        "stream": _run(
+            spark,
+            spark.sql(minhash_doc_sql("{s}", "doc_id", "text"), s=stream),
+            "s_minhash_sig",
+        ),
     }
-    want = {
-        r["doc_id"]: tuple(r["signature"])
-        for r in minhash_signatures(docs, "doc_id", "text").collect()
-    }
-    assert got == want
+    for kind, table in got.items():
+        sig = table.selectExpr("__id AS doc_id", "__sig AS signature")
+        assert sig.exceptAll(want).count() == 0, kind
+        assert want.exceptAll(sig).count() == 0, kind
+    assert want.count() == 200
 
 
 def test_streaming_near_dup_matches_batch_reference(spark, sf_dir, tmp_path):
@@ -706,9 +720,11 @@ def test_streaming_near_dup_matches_batch_reference(spark, sf_dir, tmp_path):
     state must carry across micro-batches) finds exactly the pairs a
     batch pass over the union finds: same-bucket pairs with
     signature-agreement >= threshold."""
-    from kafka_stream_aggregator_spark.llm.dedup import minhash_signatures
+    from kafka_stream_aggregator_spark.llm.dedup import (
+        band_buckets_sql,
+        minhash_signatures,
+    )
     from kafka_stream_aggregator_spark.streaming.neardup import (
-        band_buckets,
         streaming_near_dup,
     )
 
@@ -737,13 +753,13 @@ def test_streaming_near_dup_matches_batch_reference(spark, sf_dir, tmp_path):
         for r in out.filter(F.col("est_jaccard") >= 0.4).collect()
     }
 
-    # batch reference: same signatures, same banding, all same-bucket
-    # pairs, signature-agreement fraction >= threshold
+    # batch reference: the reference signatures, the shared band-bucket
+    # expression, all same-bucket pairs, signature agreement >= threshold
     sig = minhash_signatures(docs, "doc_id", "text")
     banded = sig.select(
         "doc_id",
         "signature",
-        F.explode(band_buckets(F.col("signature"), 32, 8)).alias("bb"),
+        F.explode(F.expr(band_buckets_sql("signature", 32, 8))).alias("bb"),
     ).select("doc_id", "signature", "bb.band", "bb.bucket")
     a = banded.select(
         F.col("band"), F.col("bucket"),
@@ -875,68 +891,6 @@ def test_streaming_near_dup_state_ttl(spark, tmp_path):
         ), f"expired doc 1 still flagged: {rows}"
     finally:
         q.stop()
-
-
-def test_streaming_near_dup_tws_plan_or_run(spark, sf_dir, tmp_path):
-    """State-v2 MapState near-dup: where protobuf is available, the
-    2-file stream finds the same pair set as the v1 operator; without
-    it (this container), the transformWithStateInPandas plan must
-    still analyze with the v1 output schema."""
-    from kafka_stream_aggregator_spark.streaming.neardup import (
-        streaming_near_dup_tws,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").limit(100).select(
-        "doc_id", "text"
-    )
-    d = str(tmp_path / "nd_tws")
-    docs.coalesce(1).write.mode("overwrite").parquet(d)
-    stream = file_stream(spark, d, "doc_id long, text string")
-    sdf = streaming_near_dup_tws(
-        stream, jaccard_threshold=0.4, state_ttl_ms=60_000
-    )
-    assert [f.name for f in sdf.schema.fields] == [
-        "id_a", "id_b", "band", "est_jaccard", "n_suppressed",
-    ]
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf absent: state-v2 worker cannot run here")
-    prior = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in _run(spark, sdf, "s_nd_tws", mode="update").collect()
-        }
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-    from kafka_stream_aggregator_spark.streaming.neardup import (
-        streaming_near_dup,
-    )
-
-    stream2 = file_stream(spark, d, "doc_id long, text string")
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in _run(
-            spark,
-            streaming_near_dup(stream2, jaccard_threshold=0.4),
-            "s_nd_v1ref",
-            mode="update",
-        ).collect()
-    }
-    assert got == want
 
 
 def test_streaming_near_dup_hot_bucket_bounded(spark, tmp_path):
