@@ -409,6 +409,32 @@ def test_minhash_doc_table_no_aggregate_no_explode(spark, sf_dir):
     assert "Aggregate" not in plan  # no Hash/Object/Sort aggregate
 
 
+def test_minhash_doc_table_matches_signatures(spark, sf_dir):
+    """The per-doc table's array-expression signature equals
+    minhash_signatures' explode + groupBy signature bit-for-bit (same
+    xxhash64 calls, different plan shape)."""
+    from pyspark.sql import functions as F
+
+    from kafka_stream_aggregator_spark.llm.dedup import (
+        minhash_doc_table,
+        minhash_signatures,
+    )
+    from kafka_stream_aggregator_spark.tables import load_table
+
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 200)
+    )
+    hof = minhash_doc_table(d, "doc_id", "text").selectExpr(
+        "__id AS doc_id", "__sig AS signature"
+    )
+    agg = minhash_signatures(d, "doc_id", "text")
+    assert hof.exceptAll(agg).count() == 0
+    assert agg.exceptAll(hof).count() == 0
+    assert agg.count() == 200
+
+
 def _lambda_bodies(plan: str) -> list[str]:
     """Every ``lambdafunction(...)`` span of a plan string, brackets
     matched (nested lambdas appear both inside their parent and alone)."""

@@ -679,15 +679,12 @@ def test_streaming_dedup_within_watermark(spark, events_dir):
     assert n == batch_n
 
 
-def test_minhash_signature_equals_reference_batch_and_stream(
-    spark, sf_dir, tmp_path
-):
-    """The shared per-doc signature (llm.dedup.minhash_doc_sql) equals
-    the explode + groupBy reference minhash_signatures bit for bit, run
-    as the batch doc table and on a file stream."""
+def test_rowwise_signature_equals_batch(spark, sf_dir, tmp_path):
+    """The streaming per-row signature (llm.dedup.minhash_doc_sql run on
+    a file stream) must be bit-identical to the batch explode + groupBy
+    reference minhash_signatures."""
     from kafka_stream_aggregator_spark.llm.dedup import (
         minhash_doc_sql,
-        minhash_doc_table,
         minhash_signatures,
     )
 
@@ -700,18 +697,13 @@ def test_minhash_signature_equals_reference_batch_and_stream(
     d = str(tmp_path / "sig_stream")
     docs.write.parquet(d)
     stream = file_stream(spark, d, "doc_id long, text string")
-    got = {
-        "batch": minhash_doc_table(docs, "doc_id", "text"),
-        "stream": _run(
-            spark,
-            spark.sql(minhash_doc_sql("{s}", "doc_id", "text"), s=stream),
-            "s_minhash_sig",
-        ),
-    }
-    for kind, table in got.items():
-        sig = table.selectExpr("__id AS doc_id", "__sig AS signature")
-        assert sig.exceptAll(want).count() == 0, kind
-        assert want.exceptAll(sig).count() == 0, kind
+    got = _run(
+        spark,
+        spark.sql(minhash_doc_sql("{s}", "doc_id", "text"), s=stream),
+        "s_minhash_sig",
+    ).selectExpr("__id AS doc_id", "__sig AS signature")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
     assert want.count() == 200
 
 
