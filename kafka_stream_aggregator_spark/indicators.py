@@ -179,10 +179,13 @@ def cumulative_ewma_col(
     """Continuous (cross-row) zero-seeded EWMA as a pure window expression.
 
     Closed form S_i = alpha * lam^i * sum_j(x_j * lam^-j) over a running
-    window — one shuffle, JVM-side, no python. lam^-i overflows past
-    ~100k rows per key (lam = 1 - 2/301), so this is the fast path for
-    bounded rows per key; for unbounded keys use the streaming stateful
-    fold ``streaming.stateful.continuous_ewma``, O(1) state per key.
+    window — one shuffle, JVM-side, no python. lam^-i overflows a double
+    once i > 709.78 / ln(1/(1-alpha)) rows per key — 106,466 at
+    ewma_alpha(5) = 2/301, but 21,291 at ewma_alpha(1) = 2/61 (ind_macd's
+    fast line) — and the result turns Infinity, then NaN. So this is the
+    fast path for bounded rows per key; for unbounded keys use the
+    streaming stateful fold ``streaming.stateful.continuous_ewma``, O(1)
+    state per key.
     """
     from pyspark.sql import Window as W
 

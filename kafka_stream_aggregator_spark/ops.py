@@ -431,13 +431,26 @@ def exact_percentiles_counts(
     a continuous column the counts table is the data and this becomes
     a worse sort tier (choose_percentile_tier never infers it).
     """
-    g = list(group_cols)
     v = F.col(value_col).cast("double")
     counts = (
         df.filter(v.isNotNull())
-        .groupBy(*g, v.alias("__v"))
+        .groupBy(*group_cols, v.alias("__v"))
         .agg(F.count(F.lit(1)).alias("__c"))
     )
+    return percentiles_from_counts(counts, group_cols, qs)
+
+
+def percentiles_from_counts(
+    counts: DataFrame,
+    group_cols: Sequence[str],
+    qs: Sequence[tuple[float, float | str]],
+) -> DataFrame:
+    """The counts tier's finisher: ``counts`` holds one row per (group,
+    double value ``__v``) with its count ``__c``, from
+    ``exact_percentiles_counts`` or drained from a stream
+    (``stream_window_percentile``). Cumulative windows over that table
+    give each value row ``__below`` and the group's ``__n``."""
+    g = list(group_cols)
     w = (W.partitionBy(*g) if g else W.partitionBy(F.lit(1))).orderBy("__v")
     w_all = W.partitionBy(*g) if g else W.partitionBy(F.lit(1))
     cum = counts.select(

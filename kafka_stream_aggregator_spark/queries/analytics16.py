@@ -179,18 +179,7 @@ def ml_kfold_cv_linreg(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query(
-    "events_poisson_burst",
-    # Per (event_type, hour-of-day) baseline rate from observed hourly
-    # cells; a cell is a burst when its Poisson z-score
-    # (c - lambda)/sqrt(lambda) exceeds 1.5 (the demo threshold that
-    # fires on the near-uniform synthetic timeline; production would
-    # use 3). lambda = exact integer
-    # total / integer cell count (identical double chain). The
-    # baseline averages OBSERVED cells (documented: absent cells are
-    # genuinely absent hours, not zeros, under the extending-timeline
-    # scale model).
-    oracle="""
+BURST_SQL = """
     WITH cells AS (
       SELECT event_type,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour,
@@ -211,17 +200,42 @@ def ml_kfold_cv_linreg(spark, sf_dir):
      AND cells.hour % 24 = base.hod
     WHERE (c - CAST(total AS DOUBLE) / n_cells)
           / sqrt(CAST(total AS DOUBLE) / n_cells) > 1.5
-    """,
+    """
+
+
+@query(
+    "events_poisson_burst",
+    # Per (event_type, hour-of-day) baseline rate from observed hourly
+    # cells; a cell is a burst when its Poisson z-score
+    # (c - lambda)/sqrt(lambda) exceeds 1.5 (the demo threshold that
+    # fires on the near-uniform synthetic timeline; production would
+    # use 3). lambda = exact integer
+    # total / integer cell count (identical double chain). The
+    # baseline averages OBSERVED cells (documented: absent cells are
+    # genuinely absent hours, not zeros, under the extending-timeline
+    # scale model).
+    oracle=BURST_SQL,
 )
 def events_poisson_burst(spark, sf_dir):
     """Burst cells: one fact shuffle into hourly cells, the bounded
     (type, hour-of-day) baseline broadcast back — two aggregates and
-    a map-only flag pass."""
-    ev = t(spark, sf_dir, "events")
-    cells = ev.groupBy(
+    a map-only flag pass. The stream twin (stream_poisson_burst) runs
+    the same two steps."""
+    return burst_flags(hour_cells(t(spark, sf_dir, "events")))
+
+
+def hour_cells(events):
+    """Event count per (event_type, epoch hour) cell, batch or
+    streaming (a count is order- and batching-independent)."""
+    return events.groupBy(
         "event_type",
         F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("hour"),
     ).agg(F.count("*").cast("bigint").alias("c"))
+
+
+def burst_flags(cells):
+    """Cells of ``hour_cells`` whose Poisson z-score against their
+    (type, hour-of-day) baseline exceeds 1.5, with lambda and z."""
     base = cells.groupBy(
         "event_type", (F.col("hour") % 24).alias("hod")
     ).agg(

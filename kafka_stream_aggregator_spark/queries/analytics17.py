@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .analytics16 import BURST_SQL, burst_flags, hour_cells
 from .base import query, t
 from .streaming_q import _events_stream, _run_to_df
 
@@ -171,68 +172,22 @@ def corpus_ngram_coverage_curve(spark, sf_dir):
     # batch cells EXACTLY and the batch oracle applies verbatim —
     # bursts computed on drained state match the batch operator row
     # for row (the stream_cms/hll/kmv equivalence argument).
-    oracle="""
-    WITH cells AS (
-      SELECT event_type,
-             CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour,
-             CAST(count(*) AS BIGINT) AS c
-      FROM events GROUP BY 1, 2
-    ), base AS (
-      SELECT event_type, hour % 24 AS hod,
-             CAST(sum(c) AS BIGINT) AS total,
-             CAST(count(*) AS BIGINT) AS n_cells
-      FROM cells GROUP BY 1, 2
-    )
-    SELECT cells.event_type, hour, c,
-           round(CAST(total AS DOUBLE) / n_cells, 6) AS lam,
-           round((c - CAST(total AS DOUBLE) / n_cells)
-                 / sqrt(CAST(total AS DOUBLE) / n_cells), 6) AS z
-    FROM cells JOIN base
-      ON cells.event_type = base.event_type
-     AND cells.hour % 24 = base.hod
-    WHERE (c - CAST(total AS DOUBLE) / n_cells)
-          / sqrt(CAST(total AS DOUBLE) / n_cells) > 1.5
-    """,
+    oracle=BURST_SQL,
 )
 def stream_poisson_burst(spark, sf_dir):
-    """Streaming burst detection: the ONLY stateful piece is the
-    per-(type, hour) count — state bounded at observed cells, complete
-    mode, batching-independent. Baseline + z flagging run on the
-    drained cells (bounded relation). At 100 TB/day the same topology
-    holds: the hot aggregation state is one counter per cell."""
-    s = _events_stream(spark, sf_dir)
-    cells_stream = (
-        s.groupBy(
-            "event_type",
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("hour"),
-        )
-        .agg(F.count("*").cast("bigint").alias("c"))
+    """Streaming burst detection with events_poisson_burst's steps: the
+    ONLY stateful piece is the per-(type, hour) count (``hour_cells``)
+    — state bounded at observed cells, complete mode,
+    batching-independent. Baseline + z flagging (``burst_flags``) run
+    on the drained cells (bounded relation). At 100 TB/day the same
+    topology holds: the hot aggregation state is one counter per
+    cell."""
+    cells = _run_to_df(
+        spark, hour_cells(_events_stream(spark, sf_dir)), mode="complete"
     )
     # localCheckpoint: Spark's DeduplicateRelations cannot re-alias a
     # self-join of the same MemoryPlan view (INTERNAL_ERROR conflicting
     # references); the checkpointed LogicalRDD self-joins fine, and the
     # drained state is bounded (one row per cell) so the materialization
     # is O(cells).
-    cells = _run_to_df(spark, cells_stream, mode="complete").localCheckpoint()
-    base = cells.groupBy(
-        "event_type", (F.col("hour") % 24).alias("hod")
-    ).agg(
-        F.sum("c").cast("bigint").alias("total"),
-        F.count("*").cast("bigint").alias("n_cells"),
-    )
-    lam = F.col("total").cast("double") / F.col("n_cells")
-    z = (F.col("c") - lam) / F.sqrt(lam)
-    return (
-        cells.withColumn("hod", F.col("hour") % 24)
-        .join(F.broadcast(base), ["event_type", "hod"])
-        .filter(z > 1.5)
-        .select(
-            "event_type",
-            "hour",
-            "c",
-            F.round(lam, 6).alias("lam"),
-            F.round(z, 6).alias("z"),
-        )
-    )
+    return burst_flags(cells.localCheckpoint())

@@ -199,13 +199,7 @@ def trade_amihud_illiquidity(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query(
-    "events_stickiness",
-    # Per month: average DAU, MAU, and the stickiness ratio
-    # avg_dau / mau = sum_dau / (n_days * mau). Pure integer counts on
-    # a distinct (month, day, user) relation — exact everywhere; the
-    # two emitted ratios are single closed-form divisions.
-    oracle="""
+STICKINESS_SQL = """
     WITH d AS (
       SELECT DISTINCT strftime(date_trunc('month', ts), '%Y-%m') AS mon,
              CAST(date_trunc('day', ts) AS DATE) AS day, user_id
@@ -224,29 +218,51 @@ def trade_amihud_illiquidity(spark, sf_dir):
            round(CAST(sum_dau AS DOUBLE) / (n_days * mau.mau), 6)
              AS stickiness
     FROM x JOIN mau ON x.mon = mau.mon
-    """,
+    """
+
+
+@query(
+    "events_stickiness",
+    # Per month: average DAU, MAU, and the stickiness ratio
+    # avg_dau / mau = sum_dau / (n_days * mau). Pure integer counts on
+    # a distinct (month, day, user) relation — exact everywhere; the
+    # two emitted ratios are single closed-form divisions.
+    oracle=STICKINESS_SQL,
 )
 def events_stickiness(spark, sf_dir):
     """DAU/MAU: ONE distinct reduce over (month, day, user) is the only
     fact-sized shuffle; DAU and MAU both re-aggregate that bounded
     relation (months x 31 x users worst case, but shrunk to months x 31
-    and months rows immediately)."""
-    ev = t(spark, sf_dir, "events")
-    d = ev.select(
+    and months rows immediately). The stream twin (stream_dau_mau)
+    runs the same two steps."""
+    return stickiness(active_days(t(spark, sf_dir, "events")))
+
+
+def active_days(events):
+    """The distinct (mon, day, user_id) relation, batch or streaming."""
+    return events.select(
         F.date_format("ts", "yyyy-MM").alias("mon"),
         F.to_date("ts").alias("day"),
         "user_id",
     ).distinct()
-    dau = d.groupBy("mon", "day").agg(F.count(F.lit(1)).alias("dau"))
-    mau = d.groupBy("mon").agg(
-        F.countDistinct("user_id").alias("mau")
+
+
+def stickiness(days):
+    """Per month of ``active_days``: MAU, days, average DAU and
+    avg_dau / mau = sum_dau / (n_days * mau)."""
+    dau = days.groupBy("mon", "day").agg(F.count(F.lit(1)).alias("dau"))
+    # rename the second branch's key: on a stream both branches read the
+    # SAME memory-sink view, whose attribute ids collide in a self-join
+    mau = (
+        days.select(F.col("mon").alias("mon_m"), "user_id")
+        .groupBy("mon_m")
+        .agg(F.countDistinct("user_id").alias("mau"))
     )
     x = dau.groupBy("mon").agg(
         F.sum("dau").cast("bigint").alias("sum_dau"),
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
     )
-    j = x.join(F.broadcast(mau), "mon")
-    return j.select(
+    return x.join(F.broadcast(mau), F.col("mon") == F.col("mon_m")).select(
         "mon",
         F.col("mau").cast("bigint").alias("mau"),
         "n_days",

@@ -862,43 +862,26 @@ def emb_hard_negatives_numpy_q(spark, sf_dir):
     """,
 )
 def stream_session_ewma(spark, sf_dir):
-    """EWMA inside streaming session windows: the agg collects the
-    session's (ts, event_id, value) structs (state bounded by session
-    size), and the finalized sessions compute the closed-form EWMA
-    from the sorted array — order-sensitive analytics on gap windows
-    without a custom stateful operator."""
-    from .streaming_q import _events_stream, _run_to_df
+    """EWMA inside streaming session windows: the session-window agg
+    folds the session's values in (ts, event_id) order with
+    ``indicators.ewma_fold`` (state bounded by session size) —
+    order-sensitive analytics on gap windows without a custom stateful
+    operator — and only finalized sessions are kept."""
+    from ..indicators import ewma_fold, ordered_values
+    from .streaming_q import _events_stream, _finalized, _run_to_df
 
     s = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        s.groupBy(
-            "user_id", F.session_window("ts", "30 minutes").alias("win")
-        ).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.collect_list(
-                F.struct("ts", "event_id", "value")
-            ).alias("rows"),
-        )
+    agg = s.groupBy(
+        "user_id", F.session_window("ts", "30 minutes").alias("win")
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        ewma_fold(ordered_values("value", ("ts", "event_id")), 0.125).alias("ewma"),
     )
-    out = _run_to_df(spark, agg)
-    horizon = (
-        t(spark, sf_dir, "events")
-        .agg((F.floor(F.unix_timestamp(F.max("ts"))) - 660).alias("h"))
+    out = _run_to_df(spark, agg).select(
+        "user_id",
+        F.unix_timestamp("win.start").alias("session_start"),
+        F.unix_timestamp("win.end").alias("session_end"),
+        "n_events",
+        "ewma",
     )
-    arr = F.sort_array(F.col("rows"))
-    ewma = F.aggregate(
-        arr,
-        F.lit(0.0),
-        lambda acc, r: F.lit(0.875) * acc + F.lit(0.125) * r["value"],
-    )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(F.unix_timestamp("win.end") <= F.col("h"))
-        .select(
-            "user_id",
-            F.unix_timestamp("win.start").cast("long").alias("session_start"),
-            F.unix_timestamp("win.end").cast("long").alias("session_end"),
-            "n_events",
-            ewma.alias("ewma"),
-        )
-    )
+    return _finalized(spark, sf_dir, out, 660, F.col("session_end"))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..indicators import ewma_alpha, windowed_ewma
 from ..ops import dedup_keep_first, sessionize
+from ..streaming.pipeline import session_window_stats, sliding_window_stats
 from .base import query, t
 
 _A5 = ewma_alpha(5)  # 2/301 — indicators.rs:17 with period=5 (main.rs:111)
@@ -298,23 +299,7 @@ def ewma_5min_twolevel(spark, sf_dir):
     """,
 )
 def sliding_window_counts(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            "event_type",
-            F.window("ts", "10 minutes", "5 minutes").alias("win"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            F.unix_timestamp("win.start").alias("window_start"),
-            "n_rows",
-            "sum_value",
-        )
-    )
+    return sliding_window_stats(t(spark, sf_dir, "events")).drop("window_end")
 
 
 @query(
@@ -344,21 +329,7 @@ def sliding_window_counts(spark, sf_dir):
     """,
 )
 def session_window_batch(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp("win.start").alias("session_start"),
-            F.unix_timestamp("win.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return session_window_stats(t(spark, sf_dir, "events"))
 
 
 @query("trade_pipeline_ewma", oracle=None)

@@ -162,27 +162,39 @@ def ind_approx_percentile(spark, sf_dir):
     """,
 )
 def ind_ohlc_5min(spark, sf_dir):
-    """Single-shuffle OHLC: open/close via min/max over the
-    (ts, event_id, value) struct — (ts, event_id) is unique, so the
-    struct's lexicographic extremes ARE the first/last trades, and
-    struct min/max are DECLARATIVE aggregates (codegen HashAggregate
-    with map-side partials). min_by/max_by compute the same thing but
-    are object-hash aggregates that fall back to sort-based beyond 128
-    groups/partition — measured 12x slower at 10M rows (SCALING.md).
-    Plan at 100 TB: shuffle only (event_type, window) keyed partials,
-    one candidate struct per bound."""
-    e = t(spark, sf_dir, "events")
-    ws = (F.floor(F.unix_timestamp("ts") / 300) * 300).cast("long")
+    return ohlc_5min(t(spark, sf_dir, "events"))
+
+
+def ohlc_5min(df):
+    """Single-shuffle OHLC per (event_type, 5-min window), batch or
+    streaming (``stream_ohlc_5min`` runs it under a watermark):
+    open/close via min/max over the (ts, event_id, value) struct —
+    (ts, event_id) is unique, so the struct's lexicographic extremes
+    ARE the first/last trades, and struct min/max are DECLARATIVE
+    aggregates (codegen HashAggregate with map-side partials, one
+    candidate struct per bound in stream state). min_by/max_by compute
+    the same thing but are object-hash aggregates that fall back to
+    sort-based beyond 128 groups/partition — measured 12x slower at 10M
+    rows (SCALING.md). Plan at 100 TB: shuffle only (event_type,
+    window) keyed partials."""
     key = F.struct("ts", "event_id", "value")
     return (
-        e.select("event_type", ws.alias("window_start"), "ts", "event_id", "value")
-        .groupBy("event_type", "window_start")
+        df.groupBy("event_type", F.window("ts", "5 minutes").alias("win"))
         .agg(
             F.round(F.min(key)["value"], 6).alias("open"),
             F.round(F.max("value"), 6).alias("high"),
             F.round(F.min("value"), 6).alias("low"),
             F.round(F.max(key)["value"], 6).alias("close"),
             F.count(F.lit(1)).alias("n_trades"),
+        )
+        .select(
+            "event_type",
+            F.unix_timestamp("win.start").alias("window_start"),
+            "open",
+            "high",
+            "low",
+            "close",
+            "n_trades",
         )
     )
 

@@ -23,8 +23,11 @@ from ..sketches import (
     U64_SQL_TEMPLATE as U64,  # canonical DuckDB twin of portable_u64
     bloom_build,
     bloom_probe,
+    HLL_NUM,
     cms_build,
     cms_estimate,
+    hll_estimate,
+    hll_registers,
     portable_u64,
 )
 from .base import query, t
@@ -642,14 +645,6 @@ def emb_signlsh_neardup(spark, sf_dir):
     )
 
 
-# HLL numerator literal, computed ONCE so Spark and DuckDB divide the
-# identical double: alpha_64 * m^2 * 2^55 (registers hold 2^(55-rho) as
-# exact BIGINTs, so the harmonic sum is INTEGER-exact cross-engine and
-# the estimate is a single deterministic double division).
-_HLL_M = 64
-_HLL_NUM = repr(0.709 * _HLL_M * _HLL_M * float(1 << 55))
-
-
 def _hll_regs_sql() -> str:
     h = U64.format(expr="CAST(user_id AS VARCHAR)")
     return f"""
@@ -673,9 +668,9 @@ _HLL_ESTIMATE_SQL = f"""
       FROM events GROUP BY event_type
     )
     SELECT e.event_type, n_regs,
-           round(CASE WHEN {_HLL_NUM} / s <= 160 AND n_regs < 64
+           round(CASE WHEN {HLL_NUM} / s <= 160 AND n_regs < 64
                       THEN 64 * ln(64.0 / (64 - n_regs))
-                      ELSE {_HLL_NUM} / s END, 4) AS hll_estimate,
+                      ELSE {HLL_NUM} / s END, 4) AS hll_estimate,
            exact_distinct
     FROM est e JOIN truth USING (event_type)
 """
@@ -709,38 +704,7 @@ def sketch_hll_portable(spark, sf_dir):
     condition is the identical double on both engines, so the oracle
     replays the correction too."""
     ev = t(spark, sf_dir, "events")
-    h = portable_u64(F.col("user_id"))
-    w = F.shiftright(h, 6)
-    rho = F.when(w > 0, F.lit(55) - F.length(F.bin(w))).otherwise(F.lit(55))
-    regs = (
-        ev.select("event_type", F.pmod(h, F.lit(64)).alias("reg"), rho.alias("rho"))
-        .groupBy("event_type", "reg")
-        .agg(F.max("rho").alias("rho"))
-    )
-    est = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_regs"),
-        (
-            F.sum(F.expr("shiftleft(cast(1 as bigint), 55 - rho)"))
-            + (F.lit(64) - F.count(F.lit(1))) * F.lit(1 << 55)
-        ).alias("s"),
-    )
     truth = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("bigint").alias("exact_distinct")
     )
-    return (
-        est.join(truth, "event_type")
-        .select(
-            "event_type",
-            "n_regs",
-            F.round(
-                F.when(
-                    (F.lit(float(_HLL_NUM)) / F.col("s") <= 160)
-                    & (F.col("n_regs") < 64),
-                    F.lit(64)
-                    * F.log(F.lit(64.0) / (F.lit(64) - F.col("n_regs"))),
-                ).otherwise(F.lit(float(_HLL_NUM)) / F.col("s")),
-                4,
-            ).alias("hll_estimate"),
-            "exact_distinct",
-        )
-    )
+    return hll_estimate(hll_registers(ev)).join(truth, "event_type")

@@ -2,14 +2,26 @@
 Structured Streaming (file source -> availableNow -> memory sink), then
 returned as a batch DataFrame so the driver can compare them.
 
+A stream twin runs its batch query's definition: the batch query is
+``finisher(state(table))`` and the stream query is
+``finisher(drain(state(stream)))``, where ``state`` is the streamable
+aggregate and ``drain`` (``_run_to_df``) runs it to a memory table.
+The shared scaffolding lives here: one copy of ``events`` per session
+and tier for the file stream (``_events_stream``), the memory-sink
+runner, the finalized-horizon cut (``_finalized``) and the two
+one-file micro-batch stream (``_two_batch_update``).
+
 stream_ewma_5min carries a full DuckDB oracle: the batch closed form
 restricted to windows the stream actually finalizes (append mode emits a
 window only once the watermark — max event time minus 10 min — passes
-its end; the unfinalized tail is excluded on both sides).
+its end; the unfinalized tail is excluded on both sides). Every query
+that cuts at a horizon uses the lag of its oracle's ``h`` CTE.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 import uuid
 
@@ -18,8 +30,14 @@ from pyspark.sql import functions as F
 
 from ..indicators import ewma_alpha
 from ..schemas import EVENTS_SCHEMA
-from ..streaming.pipeline import streaming_dedup, streaming_windowed_ewma
+from ..streaming.pipeline import (
+    session_window_stats,
+    sliding_window_stats,
+    streaming_dedup,
+    streaming_windowed_ewma,
+)
 from ..sketches import U64_SQL_TEMPLATE as _U64
+from ..streaming.sinks import start_to_memory
 from ..streaming.sources import file_stream
 from ..tables import table_path
 from .base import query, t
@@ -28,25 +46,64 @@ _A5 = ewma_alpha(5)
 
 
 def _events_stream(spark, sf_dir):
-    """File-stream over events (rewritten to us-timestamps in a temp dir:
-    the streaming reader needs a declared schema and cannot read the
-    original TIMESTAMP(NANOS) files)."""
-    d = tempfile.mkdtemp(prefix="stream_events_")
-    t(spark, sf_dir, "events").write.mode("overwrite").parquet(d)
-    return file_stream(spark, d, EVENTS_SCHEMA)
+    """File-stream over events. The streaming reader needs a declared
+    schema and cannot read the original TIMESTAMP(NANOS) files, so
+    ``events`` is rewritten with microsecond timestamps — once per
+    session and tier, memoized on the session like ``tables.load_table``,
+    and removed when the process exits."""
+    copies = getattr(spark, "_ksa_events_copies", None)
+    if copies is None:
+        copies = spark._ksa_events_copies = {}
+    if sf_dir not in copies:
+        d = tempfile.mkdtemp(prefix="stream_events_")
+        atexit.register(shutil.rmtree, d, True)
+        t(spark, sf_dir, "events").write.mode("overwrite").parquet(d)
+        copies[sf_dir] = d
+    return file_stream(spark, copies[sf_dir], EVENTS_SCHEMA)
 
 
 def _run_to_df(spark, sdf, mode="append"):
     name = "q_" + uuid.uuid4().hex[:12]
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_to_memory(sdf, name, mode).awaitTermination()
     return spark.table(name)
+
+
+def _finalized(spark, sf_dir, out, lag, end, last_ts=None):
+    """Rows of the drained ``out`` whose ``end`` (epoch seconds) is at
+    or before the finalized horizon: the last event time (``max(ts)``
+    of events unless ``last_ts`` is given), floored to a second, minus
+    ``lag`` — the ``h`` CTE of the query's oracle."""
+    last = (
+        F.unix_timestamp(F.max("ts"))
+        if last_ts is None
+        else F.unix_timestamp(last_ts)
+    )
+    horizon = t(spark, sf_dir, "events").agg((F.floor(last) - lag).alias("__h"))
+    return (
+        out.crossJoin(F.broadcast(horizon))
+        .filter(end <= F.col("__h"))
+        .drop("__h")
+    )
+
+
+def _two_batch_update(spark, df, key, build, partitions="4"):
+    """Drain ``build(stream)`` in update mode, where the stream delivers
+    ``df`` as two one-file micro-batches (even ``key`` rows, then odd)
+    and the query runs with ``partitions`` shuffle partitions. The
+    partition count binds at (fresh) checkpoint creation, so it is set
+    for this run only."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with tempfile.TemporaryDirectory(prefix="stream_two_batch_") as d:
+        for parity, mode in ((0, "overwrite"), (1, "append")):
+            df.filter(F.col(key) % 2 == parity).coalesce(1).write.mode(
+                mode
+            ).parquet(d)
+        stream = file_stream(spark, d, df.schema, max_files_per_trigger=1)
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        try:
+            return _run_to_df(spark, build(stream), mode="update")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @query(
@@ -194,16 +251,6 @@ def stream_neardup_pairs(spark, sf_dir):
     from ..streaming.neardup import streaming_near_dup
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="stream_neardup_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-    stream = file_stream(
-        spark, d, "doc_id long, text string", max_files_per_trigger=1
-    )
     # State-partition count scales with the tier (VERDICT r11 item 5).
     # At gate scale (<=5k docs, 2 micro-batches) the wall time is
     # micro-batches x state partitions x Python-worker spin-up, not
@@ -211,8 +258,7 @@ def stream_neardup_pairs(spark, sf_dir):
     # near-empty stateful Python tasks) and keeps the artifact
     # deterministic. Past ~20k docs the v1 state API's per-key-group
     # overhead dominates instead and DIVIDES with partitions, so big
-    # tiers keep the session/cluster default. The knob binds at
-    # (fresh) checkpoint creation, so this is per-run.
+    # tiers keep the session/cluster default.
     # The per-task share of that spin-up cost shrank once
     # `zipimport_cache` stopped Spark's per-task invalidate_caches()
     # from re-reading zip archives (docs/SCALING.md "Python
@@ -229,18 +275,13 @@ def stream_neardup_pairs(spark, sf_dir):
         n_docs = pq.ParquetFile(table_path(sf_dir, "documents")).metadata.num_rows
     except Exception:
         n_docs = docs.count()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", "4" if n_docs <= 20_000 else prev
+    out = _two_batch_update(
+        spark,
+        docs,
+        "doc_id",
+        lambda stream: streaming_near_dup(stream, jaccard_threshold=0.3),
+        "4" if n_docs <= 20_000 else spark.conf.get("spark.sql.shuffle.partitions"),
     )
-    try:
-        out = _run_to_df(
-            spark,
-            streaming_near_dup(stream, jaccard_threshold=0.3),
-            mode="update",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         # saturation marker rows (id_a NULL, n_suppressed set) are a
         # scale signal, not pairs — none occur at registry scale, but
@@ -290,43 +331,38 @@ def stream_neardup_pairs(spark, sf_dir):
     """,
 )
 def stream_ohlc_5min(spark, sf_dir):
-    """Streaming OHLC candles: tumbling event-time window + watermark,
-    open/close via declarative struct min/max over (ts, event_id,
-    value) — the same single partial-aggregatable state shape as the
-    batch twin (ind_ohlc_5min), so per-window state is one candidate
-    struct per bound, never a buffer of trades."""
+    """Streaming OHLC candles: ``ohlc_5min``, the batch twin's
+    definition, on a watermarked stream — per-window state is one
+    candidate struct per bound, never a buffer of trades."""
+    from .indicators_q import ohlc_5min
+
     s = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    key = F.struct("ts", "event_id", "value")  # declarative struct min/max
-    agg = (
-        s.groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(
-            F.round(F.min(key)["value"], 6).alias("open"),
-            F.round(F.max("value"), 6).alias("high"),
-            F.round(F.min("value"), 6).alias("low"),
-            F.round(F.max(key)["value"], 6).alias("close"),
-            F.count(F.lit(1)).alias("n_trades"),
-        )
+    out = _run_to_df(spark, ohlc_5min(s))
+    return _finalized(spark, sf_dir, out, 660, F.col("window_start") + 300)
+
+
+def _purchase_click_join(spark, sf_dir, how):
+    """Drained watermarked stream-stream join (``how`` = inner or
+    left_outer) of purchases with the same user's clicks in the 5 min
+    before them; the click side's columns carry an ``r_`` prefix."""
+    from ..streaming.pipeline import stream_stream_join
+
+    p = _events_stream(spark, sf_dir).filter(
+        F.col("event_type") == "purchase"
+    ).select("event_id", "user_id", "ts")
+    c = _events_stream(spark, sf_dir).filter(
+        F.col("event_type") == "click"
+    ).select(
+        F.col("event_id").alias("r_event_id"),
+        F.col("user_id").alias("r_user_id"),
+        F.col("ts").alias("r_ts"),
     )
-    out = _run_to_df(spark, agg)
-    horizon = (
-        t(spark, sf_dir, "events")
-        .agg((F.floor(F.unix_timestamp(F.max("ts"))) - 660).alias("h"))
+    joined = stream_stream_join(
+        p, c, key="user_id", right_key="r_user_id",
+        left_ts="ts", right_ts="r_ts",
+        watermark="10 minutes", max_lag_seconds=300, how=how,
     )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(F.unix_timestamp("window.end") <= F.col("h"))
-        .select(
-            "event_type",
-            F.unix_timestamp(F.col("window.start"))
-            .cast("long")
-            .alias("window_start"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "n_trades",
-        )
-    )
+    return _run_to_df(spark, joined)
 
 
 @query(
@@ -359,41 +395,17 @@ def stream_join_purchase_click(spark, sf_dir):
     user) run as a REAL watermarked streaming query — bounded state on
     both sides (watermark + lag bound), append mode, then restricted to
     the guaranteed-finalized horizon for exact batch comparison."""
-    from ..streaming.pipeline import stream_stream_join
-
-    p = _events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select("event_id", "user_id", "ts")
-    c = _events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "click"
-    ).select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
+    joined = _purchase_click_join(spark, sf_dir, "inner")
+    out = _finalized(
+        spark, sf_dir, joined, 1200,
+        F.greatest(F.unix_timestamp("ts"), F.unix_timestamp("r_ts")),
     )
-    joined = stream_stream_join(
-        p, c, key="user_id", right_key="r_user_id",
-        left_ts="ts", right_ts="r_ts",
-        watermark="10 minutes", max_lag_seconds=300,
-    )
-    out = _run_to_df(spark, joined)
-    horizon = (
-        t(spark, sf_dir, "events")
-        .agg((F.floor(F.unix_timestamp(F.max("ts"))) - 1200).alias("h"))
-    )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(
-            (F.floor(F.unix_timestamp("ts")) <= F.col("h"))
-            & (F.floor(F.unix_timestamp("r_ts")) <= F.col("h"))
-        )
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("r_event_id").alias("c_id"),
-            "user_id",
-            F.floor(F.unix_timestamp("ts")).cast("long").alias("p_ts"),
-            F.floor(F.unix_timestamp("r_ts")).cast("long").alias("c_ts"),
-        )
+    return out.select(
+        F.col("event_id").alias("p_id"),
+        F.col("r_event_id").alias("c_id"),
+        "user_id",
+        F.floor(F.unix_timestamp("ts")).cast("long").alias("p_ts"),
+        F.floor(F.unix_timestamp("r_ts")).cast("long").alias("c_ts"),
     )
 
 
@@ -495,32 +507,11 @@ def stream_static_enrich(spark, sf_dir):
 )
 def stream_session_stats(spark, sf_dir):
     """Native session windows on a real watermarked stream (gap 30 min,
-    state = one open session per user, closed by watermark passage),
-    restricted to finalized sessions for exact batch comparison."""
-    s = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        s.groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-    out = _run_to_df(spark, agg)
-    horizon = (
-        t(spark, sf_dir, "events")
-        .agg((F.floor(F.unix_timestamp(F.max("ts"))) - 660).alias("h"))
-    )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(F.unix_timestamp("win.end") <= F.col("h"))
-        .select(
-            "user_id",
-            F.unix_timestamp("win.start").cast("long").alias("session_start"),
-            F.unix_timestamp("win.end").cast("long").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    state = one open session per user, closed by watermark passage):
+    ``session_window_stats``, the batch twin's definition, restricted
+    to finalized sessions for exact batch comparison."""
+    out = _run_to_df(spark, session_window_stats(_events_stream(spark, sf_dir)))
+    return _finalized(spark, sf_dir, out, 660, F.col("session_end"))
 
 
 @query(
@@ -549,34 +540,11 @@ def stream_session_stats(spark, sf_dir):
 )
 def stream_sliding_counts(spark, sf_dir):
     """Overlapping (sliding) event-time windows on a real watermarked
-    stream — per-event fan-out to length/slide windows is handled by the
+    stream — ``sliding_window_stats``, the batch twin's definition:
+    per-event fan-out to length/slide windows is handled by the
     window() expression, state is one aggregate row per open window."""
-    s = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        s.groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("win"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-    out = _run_to_df(spark, agg)
-    horizon = (
-        t(spark, sf_dir, "events")
-        .agg((F.floor(F.unix_timestamp(F.max("ts"))) - 660).alias("h"))
-    )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(F.unix_timestamp("win.end") <= F.col("h"))
-        .select(
-            "event_type",
-            F.unix_timestamp("win.start").cast("long").alias("window_start"),
-            F.unix_timestamp("win.end").cast("long").alias("window_end"),
-            "n_rows",
-            "sum_value",
-        )
-    )
+    out = _run_to_df(spark, sliding_window_stats(_events_stream(spark, sf_dir)))
+    return _finalized(spark, sf_dir, out, 660, F.col("window_end"))
 
 
 @query(
@@ -628,21 +596,13 @@ def stream_ewma_5min_twolevel(spark, sf_dir):
         period_minutes=5,
         watermark="10 minutes",
     )
-    out = _run_to_df(spark, sdf)
-    horizon = (
-        t(spark, sf_dir, "events")
-        .agg((F.floor(F.unix_timestamp(F.max("ts"))) - 1560).alias("h"))
-    )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(F.col("window_end") <= F.col("h"))
-        .select(
-            "event_type",
-            "window_start",
-            "window_end",
-            "n_rows",
-            F.round("ewma", 6).alias("ewma"),
-        )
+    out = _finalized(spark, sf_dir, _run_to_df(spark, sdf), 1560, F.col("window_end"))
+    return out.select(
+        "event_type",
+        "window_start",
+        "window_end",
+        "n_rows",
+        F.round("ewma", 6).alias("ewma"),
     )
 
 
@@ -702,26 +662,12 @@ def stream_heavy_hitters_q(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
         "event_id", F.col("user_id").cast("string").alias("uid")
     )
-    d = tempfile.mkdtemp(prefix="stream_hh_")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-    stream = file_stream(
-        spark, d, "event_id long, uid string", max_files_per_trigger=1
+    out = _two_batch_update(
+        spark,
+        ev,
+        "event_id",
+        lambda s: stream_heavy_hitters(s, "uid", k=16, n_shards=4),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = _run_to_df(
-            spark,
-            stream_heavy_hitters(stream, "uid", k=16, n_shards=4),
-            mode="update",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return latest_snapshot(out).orderBy("shard", "item")
 
 
@@ -756,26 +702,19 @@ def stream_heavy_hitters_q(spark, sf_dir):
     """,
 )
 def stream_cms_counts(spark, sf_dir):
-    """Streaming Count-Min sketch: the d-row position explode runs
-    stateless on the stream, the cell counters are a complete-mode
-    streaming aggregation with state bounded at d*w rows — the
-    bounded-state frequency answer for unbounded streams, and because
-    sum is order- and batching-independent, the drained sketch is
-    bit-identical to the batch build (so unlike the MG heavy-hitter
-    stream, this streaming sketch keeps an EXACT SQL oracle).
-    Estimates for the top-10 users are served batch-side off the
-    maintained sketch, the same serving pattern as
-    stream_complete_topk."""
-    from ..sketches import _pos
+    """Streaming Count-Min sketch: ``sketches.cms_build`` on the stream
+    — the d-row position explode runs stateless, the cell counters are
+    a complete-mode streaming aggregation with state bounded at d*w
+    rows — the bounded-state frequency answer for unbounded streams,
+    and because sum is order- and batching-independent, the drained
+    sketch is bit-identical to the batch build (so unlike the MG
+    heavy-hitter stream, this streaming sketch keeps an EXACT SQL
+    oracle). Estimates for the top-10 users are served batch-side off
+    the maintained sketch with ``cms_estimate``, the same serving
+    pattern as stream_complete_topk."""
+    from ..sketches import cms_build, cms_estimate
 
-    s = _events_stream(spark, sf_dir)
-    rows = F.array(*[F.lit(i) for i in range(4)])
-    exploded = s.select(
-        F.col("user_id"), F.explode(rows).alias("row")
-    ).select(
-        "row", _pos(F.col("user_id"), F.col("row"), 512, "portable").alias("cell")
-    )
-    sk = exploded.groupBy("row", "cell").agg(F.count(F.lit(1)).alias("cnt"))
+    sk = cms_build(_events_stream(spark, sf_dir), "user_id", 4, 512)
     sketch = _run_to_df(spark, sk, mode="complete")
     truth = (
         t(spark, sf_dir, "events")
@@ -784,15 +723,8 @@ def stream_cms_counts(spark, sf_dir):
         .orderBy(F.desc("true_cnt"), "user_id")
         .limit(10)
     )
-    lookups = truth.select(
-        "user_id", "true_cnt", F.explode(rows).alias("row")
-    ).withColumn("cell", _pos(F.col("user_id"), F.col("row"), 512, "portable"))
-    return (
-        lookups.join(F.broadcast(sketch), on=["row", "cell"])
-        .groupBy("user_id", "true_cnt")
-        .agg(F.min("cnt").alias("est_cnt"))
-        .select("user_id", "est_cnt", "true_cnt")
-    )
+    est = cms_estimate(truth, "user_id", sketch, 4, 512, out_col="est_cnt")
+    return est.select("user_id", "est_cnt", "true_cnt")
 
 
 @query(
@@ -855,7 +787,7 @@ def stream_stratified_sample(spark, sf_dir):
     return _run_to_df(spark, agg, mode="complete")
 
 
-from .sketches import _HLL_ESTIMATE_SQL, _HLL_NUM, _hll_regs_sql  # noqa: E402
+from .sketches import _HLL_ESTIMATE_SQL, _hll_regs_sql  # noqa: E402
 
 
 @query(
@@ -877,51 +809,24 @@ def stream_hll_distinct(spark, sf_dir):
     bounded-state answer to "how many distinct users, forever" that an
     exact streaming countDistinct (state per distinct user, unbounded)
     cannot give: state is |types| x 64 register rows REGARDLESS of
-    stream length or user cardinality. Because max() is order- and
+    stream length or user cardinality. The registers and the estimate
+    are sketch_hll_portable's (``sketches.hll_registers`` /
+    ``hll_estimate``); because max() is order- and
     batching-independent, the drained registers are bit-identical to
     the batch build, so — like stream_cms_counts and
     stream_stratified_sample — this probabilistic STREAMING op is
-    exactly SQL-oracled (the estimate arithmetic is shared with
-    sketch_hll_portable, integer-exact harmonic sums). The exact
-    distinct count rides the batch side for the error readout."""
-    from ..sketches import portable_u64
+    exactly SQL-oracled. The exact distinct count rides the batch side
+    for the error readout."""
+    from ..sketches import hll_estimate, hll_registers
 
-    s = _events_stream(spark, sf_dir)
-    h = portable_u64(F.col("user_id"))
-    w = F.shiftright(h, 6)
-    rho = F.when(w > 0, F.lit(55) - F.length(F.bin(w))).otherwise(F.lit(55))
-    regs_stream = (
-        s.select(
-            "event_type", F.pmod(h, F.lit(64)).alias("reg"), rho.alias("rho")
-        )
-        .groupBy("event_type", "reg")
-        .agg(F.max("rho").alias("rho"))
-    )
-    regs = _run_to_df(spark, regs_stream, mode="complete")
-    est = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_regs"),
-        (
-            F.sum(F.expr("shiftleft(cast(1 as bigint), 55 - rho)"))
-            + (F.lit(64) - F.count(F.lit(1))) * F.lit(1 << 55)
-        ).alias("s"),
-    )
+    regs = hll_registers(_events_stream(spark, sf_dir))
     truth = (
         t(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").cast("bigint").alias("exact_distinct"))
     )
-    return est.join(truth, "event_type").select(
-        "event_type",
-        "n_regs",
-        F.round(
-            F.when(
-                (F.lit(float(_HLL_NUM)) / F.col("s") <= 160)
-                & (F.col("n_regs") < 64),
-                F.lit(64) * F.log(F.lit(64.0) / (F.lit(64) - F.col("n_regs"))),
-            ).otherwise(F.lit(float(_HLL_NUM)) / F.col("s")),
-            4,
-        ).alias("hll_estimate"),
-        "exact_distinct",
+    return hll_estimate(_run_to_df(spark, regs, mode="complete")).join(
+        truth, "event_type"
     )
 
 
@@ -1092,9 +997,11 @@ def stream_cdc_materialize(spark, sf_dir):
 def stream_window_percentile(spark, sf_dir):
     """Streaming exact median per 5-min window: the stream reduces to
     watermarked (window, type, 2-dp value) counts (append mode emits
-    a window's cells once finalized); the finisher replays the
-    counts-tier quantile_cont selection — one bounded cumulative
-    window over cells, never over rows."""
+    a window's cells once finalized); the finisher is the counts
+    tier's own, ``ops.percentiles_from_counts`` — bounded cumulative
+    windows over cells, never over rows."""
+    from ..ops import percentiles_from_counts
+
     s = _events_stream(spark, sf_dir)
     cells = (
         s.filter(F.col("value").isNotNull())
@@ -1109,50 +1016,17 @@ def stream_window_percentile(spark, sf_dir):
     drained = _run_to_df(spark, cells).select(
         "event_type",
         F.col("w.start").cast("long").alias("ws"),
-        F.col("x").cast("double").alias("x"),
-        "c",
+        F.col("x").cast("double").alias("__v"),
+        F.col("c").alias("__c"),
+        F.sum("c").over(W.partitionBy("event_type", "w")).alias("n"),
     )
-    wc = (
-        W.partitionBy("event_type", "ws")
-        .orderBy("x")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wall = W.partitionBy("event_type", "ws")
-    cum = drained.select(
-        "event_type",
-        "ws",
-        "x",
-        "c",
-        (F.sum("c").over(wc) - F.col("c")).alias("below"),
-        F.sum("c").over(wall).alias("n"),
-    )
-    pos = 0.5 * (F.col("n") - 1)
-    sel = cum.groupBy("event_type", "ws").agg(
-        F.max("n").alias("n"),
-        F.max(
-            F.when(
-                (F.col("below") <= F.floor(pos))
-                & (F.floor(pos) < F.col("below") + F.col("c")),
-                F.col("x"),
-            )
-        ).alias("lo"),
-        F.max(
-            F.when(
-                (F.col("below") <= F.ceil(pos))
-                & (F.ceil(pos) < F.col("below") + F.col("c")),
-                F.col("x"),
-            )
-        ).alias("hi"),
-    )
-    pos2 = 0.5 * (F.col("n") - 1)
-    return sel.select(
+    # n is constant per window: grouping by it too carries it to the output
+    p50 = percentiles_from_counts(drained, ["event_type", "ws", "n"], [(0.5, "p50")])
+    return p50.select(
         "event_type",
         F.col("ws").alias("window_start"),
         F.col("n").cast("bigint").alias("n_rows"),
-        F.round(
-            F.col("lo") + (pos2 - F.floor(pos2)) * (F.col("hi") - F.col("lo")),
-            6,
-        ).alias("p50"),
+        F.round("p50", 6).alias("p50"),
     )
 
 
@@ -1197,60 +1071,17 @@ def stream_outer_join_unmatched(spark, sf_dir):
     """Stream-stream LEFT OUTER join under availableNow: matched
     pairs emit on match, unmatched purchases emit with NULLs at
     state expiry; the finalized-horizon filter makes both exact."""
-    from ..streaming.pipeline import stream_stream_join
-
-    p = _events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select("event_id", "user_id", "ts")
-    c = _events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "click"
-    ).select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
+    purchase_ts = F.max(F.when(F.col("event_type") == "purchase", F.col("ts")))
+    click_ts = F.max(F.when(F.col("event_type") == "click", F.col("ts")))
+    out = _finalized(
+        spark, sf_dir, _purchase_click_join(spark, sf_dir, "left_outer"), 1200,
+        F.unix_timestamp("ts"), last_ts=F.least(purchase_ts, click_ts),
     )
-    joined = stream_stream_join(
-        p, c, key="user_id", right_key="r_user_id",
-        left_ts="ts", right_ts="r_ts",
-        watermark="10 minutes", max_lag_seconds=300, how="left_outer",
-    )
-    out = _run_to_df(spark, joined)
-    ev = t(spark, sf_dir, "events")
-    horizon = ev.agg(
-        (
-            F.floor(
-                F.unix_timestamp(
-                    F.least(
-                        F.max(
-                            F.when(
-                                F.col("event_type") == "purchase",
-                                F.col("ts"),
-                            )
-                        ),
-                        F.max(
-                            F.when(
-                                F.col("event_type") == "click",
-                                F.col("ts"),
-                            )
-                        ),
-                    )
-                )
-            )
-            - 1200
-        ).alias("h")
-    )
-    return (
-        out.crossJoin(F.broadcast(horizon))
-        .filter(F.floor(F.unix_timestamp("ts")) <= F.col("h"))
-        .groupBy("user_id")
-        .agg(
-            F.count("r_event_id").cast("bigint").alias(
-                "n_matched_pairs"
-            ),
-            F.count_if(F.col("r_event_id").isNull())
-            .cast("bigint")
-            .alias("n_unmatched_purchases"),
-        )
+    return out.groupBy("user_id").agg(
+        F.count("r_event_id").cast("bigint").alias("n_matched_pairs"),
+        F.count_if(F.col("r_event_id").isNull())
+        .cast("bigint")
+        .alias("n_unmatched_purchases"),
     )
 
 

@@ -1,6 +1,13 @@
-"""Sixth exactly-oracled streaming op (round 7): a complete-mode
-aggregation over the CUSTOM Python streaming source
-(sources/pydatasource.py TradeGenStreamReader).
+"""Streaming queries over the CUSTOM Python streaming source
+(sources/pydatasource.py TradeGenStreamReader), plus stream_dau_mau.
+
+``_drain_tradegen`` is the one drain for the tradegen stream: 2000
+rows in 5 uneven micro-batches into a complete-mode memory table,
+stopped on the committed offset. stream_pydatasource_counts counts per
+instrument; stream_tick_imbalance and stream_dau_mau run their batch
+twins' definitions (``trading.tick_counts`` / ``tick_imbalance``,
+``analytics24.active_days`` / ``stickiness``) as
+``finisher(drain(state(stream)))``.
 
 Equivalence argument (the stream_cms/hll/kmv/burst/bitmap family):
 counts per instrument are order- and batching-independent, and the
@@ -18,7 +25,9 @@ import uuid
 from pyspark.sql import functions as F
 
 from ..sketches import U64_SQL_TEMPLATE as U64
+from .analytics24 import STICKINESS_SQL, active_days, stickiness
 from .base import query
+from .streaming_q import _events_stream, _run_to_df
 
 _N = 2000
 _BATCH = 450  # deliberately not a divisor of _N: 5 uneven batches
@@ -26,6 +35,68 @@ _BATCH = 450  # deliberately not a divisor of _N: 5 uneven batches
 
 def _u(field: str) -> str:
     return U64.format(expr=f"('7:' || CAST(i AS VARCHAR) || ':{field}')")
+
+
+def _drain_tradegen(spark, state):
+    """Run ``state`` over the custom Python source's stream (2000 rows
+    in 5 uneven micro-batches of 450) into a complete-mode memory table.
+    The loop polls the query's committed offset and stops WHEN STATE
+    says all rows are served — bounded, deterministic, no
+    sleep-and-hope. Idle-progress events gate the exit, so the 10 s
+    default interval between them is cut to 500 ms for this query and
+    the session's own value restored after it."""
+    import ast
+
+    from ..sources import register
+
+    register(spark)
+    s = (
+        spark.readStream.format("tradegen")
+        .option("n_rows", _N)
+        .option("batch_rows", _BATCH)
+        .option("seed", 7)
+        .load()
+    )
+    key = "spark.sql.streaming.noDataProgressEventInterval"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "500")
+    name = "q_" + uuid.uuid4().hex[:12]
+    try:
+        q = (
+            state(s).writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 300
+            while time.time() < deadline:
+                p = q.lastProgress
+                if p and p["sources"]:
+                    end = p["sources"][0].get("endOffset")
+                    if isinstance(end, str):
+                        # the simple reader's dict offset round-trips as its
+                        # Python repr (single quotes) — not JSON
+                        end = ast.literal_eval(end)
+                    if (
+                        end
+                        and int(end.get("i", 0)) >= _N
+                        and p["numInputRows"] == 0
+                    ):
+                        # an empty batch after the final offset means the
+                        # last data batch committed its sink write
+                        break
+                time.sleep(0.2)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    return spark.table(name)
 
 
 @query(
@@ -46,61 +117,15 @@ def _u(field: str) -> str:
 )
 def stream_pydatasource_counts(spark, sf_dir):
     """Streaming scan of the custom Python source in 5 uneven
-    micro-batches (batch_rows=450 over 2000 rows), complete-mode
-    count per instrument. The drain loop polls the query's committed
-    offset and stops WHEN STATE says all rows are served — bounded,
-    deterministic, no sleep-and-hope. sf_dir unused (generator
-    source)."""
-    from ..sources import register
-
-    register(spark)
-    s = (
-        spark.readStream.format("tradegen")
-        .option("n_rows", _N)
-        .option("batch_rows", _BATCH)
-        .option("seed", 7)
-        .load()
+    micro-batches, complete-mode count per instrument, drained by
+    ``_drain_tradegen``. sf_dir unused (generator source)."""
+    return _drain_tradegen(
+        spark,
+        lambda s: s.groupBy("instrument").agg(
+            F.count("*").cast("bigint").alias("n"),
+            F.count_if(F.col("direction") == "buy").cast("bigint").alias("buys"),
+        ),
     )
-    agg = s.groupBy("instrument").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.count_if(F.col("direction") == "buy").cast("bigint").alias("buys"),
-    )
-    # idle-progress events gate the drain loop's exit; the 10 s default
-    # would add that much dead time to every run
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "500")
-    name = "q_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import ast
-
-    try:
-        deadline = time.time() + 300
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                end = p["sources"][0].get("endOffset")
-                if isinstance(end, str):
-                    # the simple reader's dict offset round-trips as its
-                    # Python repr (single quotes) — not JSON
-                    end = ast.literal_eval(end)
-                if (
-                    end
-                    and int(end.get("i", 0)) >= _N
-                    and p["numInputRows"] == 0
-                ):
-                    # an empty batch after the final offset means the
-                    # last data batch committed its sink write
-                    break
-            time.sleep(0.2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 @query(
@@ -134,73 +159,15 @@ def stream_pydatasource_counts(spark, sf_dir):
     """,
 )
 def stream_tick_imbalance(spark, sf_dir):
-    """Streaming tick imbalance: complete-mode keyed counts over the
-    custom streaming source in uneven micro-batches; the final ratio
-    is computed on the drained exact counts. sf_dir unused."""
-    from ..sources import register
+    """Streaming tick imbalance: trade_tick_imbalance's definition —
+    complete-mode keyed counts (``tick_counts``) over the custom
+    streaming source in uneven micro-batches, then the ratio
+    (``tick_imbalance``) on the drained exact counts. sf_dir unused."""
+    # imported here: a module-level import would register trading's
+    # queries ahead of this module's, changing the registry order
+    from .trading import tick_counts, tick_imbalance
 
-    register(spark)
-    s = (
-        spark.readStream.format("tradegen")
-        .option("n_rows", _N)
-        .option("batch_rows", _BATCH)
-        .option("seed", 7)
-        .load()
-    )
-    buys = F.count_if(F.col("direction") == "buy")
-    sells = F.count_if(F.col("direction") == "sell")
-    nz = F.count_if(F.col("direction") != "zero")
-    agg = s.groupBy(
-        "instrument",
-        F.floor(F.col("trade_seq") / 500).cast("bigint").alias("bucket"),
-    ).agg(
-        buys.cast("bigint").alias("buys"),
-        sells.cast("bigint").alias("sells"),
-        nz.cast("bigint").alias("nz"),
-    )
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "500")
-    name = "q_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import ast
-
-    try:
-        deadline = time.time() + 300
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                end = p["sources"][0].get("endOffset")
-                if isinstance(end, str):
-                    end = ast.literal_eval(end)
-                if (
-                    end
-                    and int(end.get("i", 0)) >= _N
-                    and p["numInputRows"] == 0
-                ):
-                    break
-            time.sleep(0.2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    drained = spark.table(name)
-    return (
-        drained.filter(F.col("nz") > 0)
-        .select(
-            "instrument",
-            "bucket",
-            "buys",
-            "sells",
-            F.round(
-                (F.col("buys") - F.col("sells")) / F.col("nz").cast("double"),
-                6,
-            ).alias("imbalance"),
-        )
-    )
+    return tick_imbalance(_drain_tradegen(spark, tick_counts))
 
 
 @query(
@@ -212,65 +179,12 @@ def stream_tick_imbalance(spark, sf_dir):
     # the drained table equals the batch distinct EXACTLY and the
     # whole stickiness pipeline stays SQL-oracle-able end to end
     # (same statement as the batch twin events_stickiness).
-    oracle="""
-    WITH d AS (
-      SELECT DISTINCT strftime(date_trunc('month', ts), '%Y-%m') AS mon,
-             CAST(date_trunc('day', ts) AS DATE) AS day, user_id
-      FROM events
-    ), dau AS (
-      SELECT mon, day, count(*) AS dau FROM d GROUP BY mon, day
-    ), mau AS (
-      SELECT mon, count(DISTINCT user_id) AS mau FROM d GROUP BY mon
-    ), x AS (
-      SELECT mon, CAST(sum(dau) AS BIGINT) AS sum_dau,
-             CAST(count(*) AS BIGINT) AS n_days
-      FROM dau GROUP BY mon
-    )
-    SELECT x.mon, CAST(mau.mau AS BIGINT) AS mau, x.n_days,
-           round(CAST(sum_dau AS DOUBLE) / n_days, 6) AS avg_dau,
-           round(CAST(sum_dau AS DOUBLE) / (n_days * mau.mau), 6)
-             AS stickiness
-    FROM x JOIN mau ON x.mon = mau.mon
-    """,
+    oracle=STICKINESS_SQL,
 )
 def stream_dau_mau(spark, sf_dir):
-    """Streaming stickiness: the stream maintains one row per distinct
-    (month, day, user) — a keyed count whose drained complete-mode
-    state is batching-independent — then DAU/MAU/stickiness close on
-    that bounded relation exactly like the batch twin."""
-    from .streaming_q import _events_stream, _run_to_df
-
-    s = _events_stream(spark, sf_dir)
-    per = s.groupBy(
-        F.date_format("ts", "yyyy-MM").alias("mon"),
-        F.to_date("ts").alias("day"),
-        "user_id",
-    ).agg(F.count(F.lit(1)).alias("n_ev"))
-    d = _run_to_df(spark, per, mode="complete")
-    dau = d.groupBy("mon", "day").agg(F.count(F.lit(1)).alias("dau"))
-    # rename the second branch's key: both branches read the SAME
-    # memory-sink view, whose attribute ids collide in a self-join
-    mau = (
-        d.select(F.col("mon").alias("mon_m"), "user_id")
-        .groupBy("mon_m")
-        .agg(F.countDistinct("user_id").alias("mau"))
-    )
-    x = dau.groupBy("mon").agg(
-        F.sum("dau").cast("bigint").alias("sum_dau"),
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-    )
-    return x.join(
-        F.broadcast(mau), F.col("mon") == F.col("mon_m")
-    ).select(
-        "mon",
-        F.col("mau").cast("bigint").alias("mau"),
-        "n_days",
-        F.round(
-            F.col("sum_dau").cast("double") / F.col("n_days"), 6
-        ).alias("avg_dau"),
-        F.round(
-            F.col("sum_dau").cast("double")
-            / (F.col("n_days") * F.col("mau")),
-            6,
-        ).alias("stickiness"),
-    )
+    """Streaming stickiness: events_stickiness's definition — the
+    stream maintains one row per distinct (month, day, user)
+    (``active_days``, drained in append mode: each distinct row is
+    emitted once, batching-independent), then DAU/MAU/stickiness
+    (``stickiness``) close on that bounded relation."""
+    return stickiness(_run_to_df(spark, active_days(_events_stream(spark, sf_dir))))

@@ -94,23 +94,38 @@ def fn_bitmap_suite(spark, sf_dir):
     """Bitmap aggregates: the map side emits (bucket, bit) per row and
     ORs 512-byte blocks map-side — the shuffle carries one bitmap per
     (group, bucket), not rows, which is the exact-distinct answer at
-    scale when ids are dense (HLL covers the sparse/unbounded case)."""
+    scale when ids are dense (HLL covers the sparse/unbounded case).
+    The stream twin (stream_bitmap_distinct) runs the same two steps."""
     ev = t(spark, sf_dir, "events")
-    bm = (
-        ev.select(
+    plain = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").cast("bigint").alias("n_distinct_plain")
+    )
+    bm = bitmap_distinct(bitmap_blocks(ev))
+    return bm.withColumnRenamed("n_distinct", "n_distinct_bitmap").join(
+        plain, "event_type"
+    )
+
+
+def bitmap_blocks(events):
+    """One OR-ed user_id bitmap per (event_type, 4096-id bucket), batch
+    or streaming: OR is commutative and idempotent, so the drained
+    blocks are independent of batching and arrival order."""
+    return (
+        events.select(
             "event_type",
             F.bitmap_bucket_number(F.col("user_id")).alias("bkt"),
             F.bitmap_bit_position(F.col("user_id")).alias("pos"),
         )
         .groupBy("event_type", "bkt")
         .agg(F.bitmap_construct_agg(F.col("pos")).alias("bits"))
-        .groupBy("event_type")
-        .agg(F.sum(F.bitmap_count(F.col("bits"))).cast("bigint").alias("n_distinct_bitmap"))
     )
-    plain = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("bigint").alias("n_distinct_plain")
+
+
+def bitmap_distinct(blocks):
+    """Exact distinct users per event_type: popcounts of ``bitmap_blocks``."""
+    return blocks.groupBy("event_type").agg(
+        F.sum(F.bitmap_count(F.col("bits"))).cast("bigint").alias("n_distinct")
     )
-    return bm.join(plain, "event_type")
 
 
 # --------------------------------------------------------------------------
@@ -240,17 +255,5 @@ def stat_wilson_ci(spark, sf_dir):
     """,
 )
 def stream_bitmap_distinct(spark, sf_dir):
-    s = _events_stream(spark, sf_dir)
-    bm_stream = (
-        s.select(
-            "event_type",
-            F.bitmap_bucket_number(F.col("user_id")).alias("bkt"),
-            F.bitmap_bit_position(F.col("user_id")).alias("pos"),
-        )
-        .groupBy("event_type", "bkt")
-        .agg(F.bitmap_construct_agg(F.col("pos")).alias("bits"))
-    )
-    drained = _run_to_df(spark, bm_stream, mode="complete")
-    return drained.groupBy("event_type").agg(
-        F.sum(F.bitmap_count(F.col("bits"))).cast("bigint").alias("n_distinct")
-    )
+    blocks = bitmap_blocks(_events_stream(spark, sf_dir))
+    return bitmap_distinct(_run_to_df(spark, blocks, mode="complete"))

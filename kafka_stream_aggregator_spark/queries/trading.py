@@ -107,26 +107,36 @@ def trade_vwap(spark, sf_dir):
 )
 def trade_tick_imbalance(spark, sf_dir):
     """Tick imbalance: one aggregate keyed by (instrument, seq
-    bucket); at any scale the bucket key keeps groups bounded."""
-    df = _trades(spark)
-    buys = F.count_if(F.col("direction") == "buy")
-    sells = F.count_if(F.col("direction") == "sell")
-    nz = F.count_if(F.col("direction") != "zero")
-    return (
-        df.groupBy(
-            "instrument",
-            F.floor(F.col("trade_seq") / 500).cast("bigint").alias("bucket"),
-        )
-        .agg(
-            buys.cast("bigint").alias("buys"),
-            sells.cast("bigint").alias("sells"),
-            F.round(
-                (buys - sells) / nz.cast("double"), 6
-            ).alias("imbalance"),
-            nz.alias("nz"),
-        )
-        .filter(F.col("nz") > 0)
-        .drop("nz")
+    bucket); at any scale the bucket key keeps groups bounded. The
+    stream twin (stream_tick_imbalance) runs the same two steps."""
+    return tick_imbalance(tick_counts(_trades(spark)))
+
+
+def tick_counts(trades):
+    """Buy, sell and non-zero tick counts per (instrument, 500-trade
+    bucket): order- and batching-independent, so a complete-mode
+    stream drains to the batch counts exactly."""
+    return trades.groupBy(
+        "instrument",
+        F.floor(F.col("trade_seq") / 500).cast("bigint").alias("bucket"),
+    ).agg(
+        F.count_if(F.col("direction") == "buy").cast("bigint").alias("buys"),
+        F.count_if(F.col("direction") == "sell").cast("bigint").alias("sells"),
+        F.count_if(F.col("direction") != "zero").cast("bigint").alias("nz"),
+    )
+
+
+def tick_imbalance(counts):
+    """(buys - sells) / non-zero ticks per bucket of ``tick_counts``,
+    buckets with no non-zero tick dropped."""
+    return counts.filter(F.col("nz") > 0).select(
+        "instrument",
+        "bucket",
+        "buys",
+        "sells",
+        F.round(
+            (F.col("buys") - F.col("sells")) / F.col("nz").cast("double"), 6
+        ).alias("imbalance"),
     )
 
 

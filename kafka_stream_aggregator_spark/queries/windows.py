@@ -272,7 +272,8 @@ def win_topk_per_group(spark, sf_dir):
 def win_cumulative_ewma(spark, sf_dir):
     """Continuous per-key EWMA via the JVM closed-form window expression
     (indicators.cumulative_ewma_col) — one shuffle, codegen'd, no python.
-    Safe while any single key holds < ~100k rows (lam^-i overflow bound);
+    Safe while no key holds more than 709.78 / ln(1/(1-alpha)) rows,
+    the lam^-i overflow bound: 106,466 at this query's alpha(5);
     beyond that the engine's grouped-map fold / stateful streaming op are
     the unbounded-scale paths (see indicators.cumulative_ewma_col)."""
     # Round-13 (guide §1): SQL-string twin of cumulative_ewma_col for

@@ -1,13 +1,14 @@
 """Mergeable probabilistic sketches with cross-engine-portable hashing.
 
-Bloom filter (set membership) and Count-Min (frequency) built as pure
-DataFrame compositions — no UDFs, no collect, no driver-side state.
-Both use a *sparse* representation: the sketch is itself a small
-DataFrame (set bit positions / non-zero cells), which makes the build a
-bounded ``groupBy`` (map-side partial aggregation caps each partition's
-contribution at the sketch size) and the probe a broadcast join. Two
-sketches merge by ``unionByName`` + the same bounded groupBy — the
-mergeability story is the plan itself.
+Bloom filter (set membership), Count-Min (frequency) and HyperLogLog
+(distinct count) built as pure DataFrame compositions — no UDFs, no
+collect, no driver-side state. Each uses a *sparse* representation: the
+sketch is itself a small DataFrame (set bit positions / non-zero cells /
+registers), which makes the build a bounded ``groupBy`` (map-side
+partial aggregation caps each partition's contribution at the sketch
+size) and the probe a broadcast join. Two sketches merge by
+``unionByName`` + the same bounded groupBy — the mergeability story is
+the plan itself.
 
 Hashing: ``portable_u64`` derives a 60-bit integer from the first 15
 hex chars of md5, which DuckDB reproduces exactly via
@@ -198,6 +199,62 @@ def cms_estimate(
     return (
         joined.groupBy(*keys)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias(out_col))
+    )
+
+
+# --------------------------------------------------------------------------
+# HyperLogLog (distinct users per event type)
+# --------------------------------------------------------------------------
+
+# HLL numerator literal, computed ONCE so Spark and DuckDB divide the
+# identical double: alpha_64 * m^2 * 2^55 (registers hold 2^(55-rho) as
+# exact BIGINTs, so the harmonic sum is INTEGER-exact cross-engine and
+# the estimate is a single deterministic double division).
+HLL_NUM = repr(0.709 * 64 * 64 * float(1 << 55))
+
+
+def hll_registers(events: DataFrame) -> DataFrame:
+    """The 64 HyperLogLog registers of ``portable_u64(user_id)`` per
+    event_type: rows ``(event_type, reg, rho)``, reg = h % 64 and rho =
+    leading zeros of the remaining 54 bits + 1 (via bin() length —
+    identical in DuckDB). ≤ |types| x 64 rows at any scale; max is
+    order- and batching-independent, so a complete-mode stream drains
+    to the batch registers exactly, and register tables merge by max."""
+    h = portable_u64(F.col("user_id"))
+    w = F.shiftright(h, 6)
+    rho = F.when(w > 0, F.lit(55) - F.length(F.bin(w))).otherwise(F.lit(55))
+    return (
+        events.select("event_type", F.pmod(h, F.lit(64)).alias("reg"), rho.alias("rho"))
+        .groupBy("event_type", "reg")
+        .agg(F.max("rho").alias("rho"))
+    )
+
+
+def hll_estimate(regs: DataFrame) -> DataFrame:
+    """``(event_type, n_regs, hll_estimate)`` from ``hll_registers``:
+    alpha * m^2 / sum(2^-rho), the harmonic sum carried as exact
+    integers (2^(55-rho) over the 2^55 folded into ``HLL_NUM``, absent
+    registers counting 2^55), so no cross-engine float-sum order can
+    flip a bit. Small-range (linear counting) correction as the paper
+    gives it: raw estimate <= 2.5m with empty registers -> m*ln(m/V)."""
+    num = F.lit(float(HLL_NUM))
+    est = regs.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_regs"),
+        (
+            F.sum(F.expr("shiftleft(cast(1 as bigint), 55 - rho)"))
+            + (F.lit(64) - F.count(F.lit(1))) * F.lit(1 << 55)
+        ).alias("s"),
+    )
+    return est.select(
+        "event_type",
+        "n_regs",
+        F.round(
+            F.when(
+                (num / F.col("s") <= 160) & (F.col("n_regs") < 64),
+                F.lit(64) * F.log(F.lit(64.0) / (F.lit(64) - F.col("n_regs"))),
+            ).otherwise(num / F.col("s")),
+            4,
+        ).alias("hll_estimate"),
     )
 
 

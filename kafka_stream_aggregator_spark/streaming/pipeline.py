@@ -10,8 +10,9 @@ windows + watermark (late data handled, deterministic fold order via
 batch queries use; on a stream it runs the EWMA as an array fold inside
 the stateful aggregation. `streaming_windowed_ewma_two_level` is
 `indicators.windowed_ewma_two_level` under a watermark (chained
-stateful aggregations). Also here: watermarked dedup, sliding/session
-windows, and one stream-stream join for inner and left-outer.
+stateful aggregations). Also here: watermarked dedup, the sliding and
+session window builders that a batch query and its stream twin both
+run, and one stream-stream join for inner and left-outer.
 """
 
 from __future__ import annotations
@@ -86,50 +87,51 @@ def streaming_dedup_within_watermark(
     )
 
 
-def sliding_window_stats(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
+def sliding_window_stats(df: DataFrame) -> DataFrame:
+    """Per event_type, rows and rounded value sum of each 10-minute
+    window sliding by 5 minutes, batch or streaming: the definition of
+    ``sliding_window_counts`` and of its stream twin
+    ``stream_sliding_counts``. Output: event_type, window_start,
+    window_end (epoch seconds), n_rows, sum_value. The 10-minute
+    watermark on ts bounds a stream's open windows; on a batch
+    DataFrame the optimizer drops it."""
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide).alias("win"), *group_cols)
+        df.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.avg(value_col).alias("avg_value"),
-            F.max(value_col).alias("max_value"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
         )
         .select(
-            *group_cols,
+            "event_type",
             F.unix_timestamp("win.start").alias("window_start"),
+            F.unix_timestamp("win.end").alias("window_end"),
             "n_rows",
-            "avg_value",
-            "max_value",
+            "sum_value",
         )
     )
 
 
-def session_window_stats(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    group_cols: Sequence[str] = ("user_id",),
-) -> DataFrame:
-    """Native session windows (gap-based), streaming or batch."""
+def session_window_stats(df: DataFrame) -> DataFrame:
+    """Per user, native session windows (30-minute gap) with their
+    event count and rounded value sum, batch or streaming: the
+    definition of ``session_window_batch`` and of its stream twin
+    ``stream_session_stats``. Output: user_id, session_start,
+    session_end (epoch seconds), n_events, sum_value. The watermark is
+    as in ``sliding_window_stats``."""
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("win"), *group_cols)
-        .agg(F.count(F.lit(1)).alias("n_events"))
+        df.withWatermark("ts", "10 minutes")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
+        )
         .select(
-            *group_cols,
+            "user_id",
             F.unix_timestamp("win.start").alias("session_start"),
             F.unix_timestamp("win.end").alias("session_end"),
             "n_events",
+            "sum_value",
         )
     )
 

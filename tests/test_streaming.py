@@ -135,10 +135,10 @@ def test_streaming_dedup(spark, events_dir):
 
 def test_sliding_and_session_windows_run(spark, events_dir, sf_dir):
     stream = file_stream(spark, events_dir, EVENTS_SCHEMA)
-    slid = _run(spark, sliding_window_stats(stream, group_cols=("event_type",)), "s_slide")
+    slid = _run(spark, sliding_window_stats(stream), "s_slide")
     assert slid.count() > 0
     stream2 = file_stream(spark, events_dir, EVENTS_SCHEMA)
-    sess = _run(spark, session_window_stats(stream2, gap="30 minutes"), "s_sess")
+    sess = _run(spark, session_window_stats(stream2), "s_sess")
     # session windows ≡ batch sessionize groups, for sessions that closed
     # before the final watermark (append mode never emits the tail ones)
     from kafka_stream_aggregator_spark.ops import sessionize
@@ -1024,3 +1024,43 @@ def test_bucket_pairs_equals_bruteforce_reference():
             for a, b, bd, e, s in out
         ][: len(pairs2)], trial
         assert ids2 == wids and sigs2 == wsigs, trial
+
+
+def test_events_stream_copy_written_once_per_session_and_tier(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The file stream's microsecond copy of `events` is written once
+    per (session, tier), not once per call: two streaming queries, each
+    run twice, leave at most one copy."""
+    from kafka_stream_aggregator_spark.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    session = spark.newSession()
+    for name in ("stream_dedup_count", "stream_bitmap_distinct") * 2:
+        REGISTRY[name].fn(session, sf_dir).collect()
+    copies = [p for p in tmp_path.iterdir() if p.name.startswith("stream_events_")]
+    assert len(copies) <= 1, copies
+
+
+@pytest.mark.parametrize("before", [None, "7s"])
+def test_tradegen_drain_restores_progress_interval(spark, sf_dir, before):
+    """The tradegen drain shortens the idle-progress interval for its
+    own query only: the caller's session keeps its setting (or its
+    default) afterwards. Runs on the suite's session, which registered
+    the tradegen source: another session cannot register it again."""
+    from kafka_stream_aggregator_spark.queries import REGISTRY
+
+    key = "spark.sql.streaming.noDataProgressEventInterval"
+    prev = spark.conf.get(key, None)
+    try:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+        assert REGISTRY["stream_tick_imbalance"].fn(spark, sf_dir).count() > 0
+        assert spark.conf.get(key, None) == before
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
